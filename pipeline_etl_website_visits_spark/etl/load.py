@@ -8,6 +8,24 @@ parquet table directories under a warehouse root:
 - ``visitantes/``   — consolidated per-email snapshot maintained by the
                       merge operator (J2)
 - ``bitacora/``     — one control row per processed file (K3)
+- ``logs/``         — the per-file stage trail (O6), partitioned by fecha
+
+Control schemas (``BITACORA_SCHEMA``, ``LOGS_SCHEMA``):
+
+- ``bitacora``: nombreArchivo string, registrosExitosos long,
+  registrosFallidos long, estatus string, fechaProceso timestamp. The batch
+  driver takes the two counts from the estadisticas/errores appends
+  themselves (:meth:`Warehouse.append_rows` reads the written files'
+  footers; no extra job); the stream driver writes all of a micro-batch's
+  rows as one append.
+- ``logs``: nombreArchivo string, etapa string (RECIBIDO, LAYOUT,
+  TRANSFORMADO, MERGE, CARGADO or FALLO), nivel string (INFO/ERROR),
+  mensaje string, seq long (orders one flush's rows), plus fechaProceso
+  timestamp and the fecha (DDMMYY) partition column. The TRANSFORMADO row
+  carries ``ok=<n> errores=<n>``, the same counts as the bitacora.
+
+Both are appended as JVM-local relations (:func:`_jvm_rows`): a one-row
+control write runs one job and no Python worker.
 
 Atomicity (K4): Spark has no cross-table transactions; the protocol is
 (1) per-file idempotent writes — estadisticas/errores use dynamic partition
@@ -39,6 +57,7 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
+    ArrayType,
     DateType,
     LongType,
     StringType,
@@ -59,6 +78,16 @@ BITACORA_SCHEMA = StructType(
     ]
 )
 
+LOGS_SCHEMA = StructType(
+    [
+        StructField("nombreArchivo", StringType(), False),
+        StructField("etapa", StringType(), False),
+        StructField("nivel", StringType(), False),
+        StructField("mensaje", StringType(), True),
+        StructField("seq", LongType(), False),
+    ]
+)
+
 VISITANTES_SCHEMA = StructType(
     [
         StructField("email", StringType(), False),
@@ -69,6 +98,20 @@ VISITANTES_SCHEMA = StructType(
         StructField("visitasMesActual", LongType(), True),
     ]
 )
+
+
+def _jvm_rows(spark: SparkSession, schema: StructType, rows: list[tuple]) -> DataFrame:
+    """``rows`` (literals or Columns, in ``schema`` order) as a DataFrame
+    built in the JVM: ``inline`` over one literal array on a one-row range.
+    ``createDataFrame`` on a Python list plans an RDD scan whose task starts
+    a Python worker, which dominated the cost of a one-row control write."""
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType) for v, f in zip(row, schema.fields)])
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.array(*structs).cast(ArrayType(schema, containsNull=False)))
+    )
 
 
 class Warehouse:
@@ -362,6 +405,38 @@ class Warehouse:
             .parquet(self.path(table))
         )
 
+    def append_rows(self, df: DataFrame, table: str, key: str) -> int:
+        """:meth:`append_partitioned` for the rows of one nombreArchivo
+        ``key``, returning how many rows the write added. The count is summed
+        from the parquet footers of the files the write put in the key's
+        partition — driver-side metadata reads, no Spark job. Files that were
+        there before the write belong to an earlier run: a write with no rows
+        leaves the old partition in place, and adds 0."""
+        jvm = self.spark._jvm
+        escaped = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(key)
+        fs, part, _ = self._fs(os.path.join(self.path(table), f"nombreArchivo={escaped}"))
+
+        def files() -> dict:
+            if not fs.exists(part):
+                return {}
+            return {str(st.getPath().getName()): st for st in fs.listStatus(part)}
+
+        before = files()
+        self.append_partitioned(df, table)
+        conf = self.spark._jsc.hadoopConfiguration()
+        rows = 0
+        for name, st in files().items():
+            if name in before or not name.endswith(".parquet"):
+                continue
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+            )
+            try:
+                rows += reader.getRecordCount()
+            finally:
+                reader.close()
+        return rows
+
     # -- small-file compaction (SURVEY §4.3: one parquet file per micro-batch
     #    otherwise) ----------------------------------------------------------
     def _live_partitions(self, table: str) -> set[str]:
@@ -412,8 +487,6 @@ class Warehouse:
         pointer flip, and the loser's rewrite — possibly the erasure —
         would be silently dropped.
         """
-        import math
-
         with self._lease(f"compact-{table}"):
             return self._compact_locked(
                 table, target_mb=target_mb, cluster_by=cluster_by, drop_where=drop_where
@@ -665,7 +738,7 @@ class Warehouse:
             else:
                 n_buckets, refs = manifest
                 b = (
-                    self.spark.createDataFrame([(email,)], "email string")
+                    _jvm_rows(self.spark, StructType([VISITANTES_SCHEMA["email"]]), [(email,)])
                     .select(self._bucket_col(n_buckets).alias("b"))
                     .collect()[0]["b"]
                 )
@@ -717,7 +790,7 @@ class Warehouse:
         if version is None:
             version = self._current_visitantes_version()
         if version is None:
-            return self.spark.createDataFrame([], VISITANTES_SCHEMA)
+            return _jvm_rows(self.spark, VISITANTES_SCHEMA, [])
         if version.startswith("tbl:"):
             # bucketed snapshot: the catalog scan carries the bucket spec the
             # merge join's exchange elimination depends on. The partitioned-
@@ -739,7 +812,7 @@ class Warehouse:
             refs = {b: v for b, v in refs.items() if b in buckets}
         paths = self._bucket_paths(refs)
         if not paths:
-            return self.spark.createDataFrame([], VISITANTES_SCHEMA)
+            return _jvm_rows(self.spark, VISITANTES_SCHEMA, [])
         # leaf dirs from (possibly) different version roots: read as plain
         # directories — bucket is derivable from email, not a data column
         return self.spark.read.schema(VISITANTES_SCHEMA).parquet(*paths)
@@ -774,7 +847,7 @@ class Warehouse:
         versions = self.visitantes_versions()
         cur = self.read_visitantes()
         if len(versions) < 2:
-            prev = self.spark.createDataFrame([], VISITANTES_SCHEMA)
+            prev = _jvm_rows(self.spark, VISITANTES_SCHEMA, [])
         else:
             prev = self.read_visitantes(version=versions[0])
         cols = [f.name for f in VISITANTES_SCHEMA.fields if f.name != "email"]
@@ -822,8 +895,6 @@ class Warehouse:
         independent of total snapshot size. Untouched buckets carry over by
         manifest reference, and the pointer flip keeps crash atomicity.
         """
-        from pipeline_etl_website_visits_spark.operators.merge import visitantes_merge
-
         with self._lease("visitantes-writer"):
             self._merge_visitantes_locked(
                 source, process_date=process_date, applied_key=applied_key
@@ -1013,7 +1084,9 @@ class Warehouse:
         n = int(version_now.rsplit("_v", 1)[1]) + 1 if version_now else 0
         version = f"visitantes_v{n}"
 
-        out = df.withColumn("bucket", self._bucket_col(n_buckets))
+        # one task per bucket, so each bucket dir gets one file instead of
+        # one per upstream partition
+        out = df.withColumn("bucket", self._bucket_col(n_buckets)).repartition("bucket")
         out.write.mode("overwrite").partitionBy("bucket").parquet(self.path(version))
         # which buckets did this write actually materialize?
         fs, vdir, jvm = self._fs(self.path(version))
@@ -1099,9 +1172,10 @@ class Warehouse:
         import time
 
         base_seq = int(time.time() * 1000) * 1000  # flush epoch-ms, 1000 slots
-        rows = self.spark.createDataFrame(
+        rows = _jvm_rows(
+            self.spark,
+            LOGS_SCHEMA,
             [(f, e, lv, m, base_seq + i) for i, (f, e, lv, m) in enumerate(events)],
-            "nombreArchivo string, etapa string, nivel string, mensaje string, seq long",
         ).withColumn("fechaProceso", F.current_timestamp()).withColumn(
             "fecha", F.date_format(F.current_date(), "ddMMyy")
         )
@@ -1115,12 +1189,15 @@ class Warehouse:
         return logs.filter(F.col("nombreArchivo") == filename).orderBy("seq")
 
     # -- bitacora commit marker (K3, written last) ---------------------------
-    def log_bitacora(self, filename: str, ok_count: int, err_count: int, status: str) -> None:
-        row = self.spark.createDataFrame(
-            [(filename, ok_count, err_count, status)],
-            "nombreArchivo string, registrosExitosos long, registrosFallidos long, estatus string",
-        ).withColumn("fechaProceso", F.current_timestamp())
-        row.write.mode("append").parquet(self.path("bitacora"))
+    def log_bitacora(self, rows: list[tuple[str, int, int, str]]) -> None:
+        """Append (filename, ok_count, err_count, status) control rows as ONE
+        append, so a micro-batch's markers land all together or not at all."""
+        if not rows:
+            return
+        stamped = [(*r, F.current_timestamp()) for r in rows]
+        _jvm_rows(self.spark, BITACORA_SCHEMA, stamped).write.mode("append").parquet(
+            self.path("bitacora")
+        )
 
     def processed_files(self) -> set[str]:
         """Filenames with a completion marker (replaces the reference's

@@ -8,10 +8,13 @@ continues. Already-processed files are skipped via the bitacora commit marker
 (fixing reference defect D13).
 
 Scale notes: the per-file loop is about *file-granular semantics* (each file
-is its own commit unit, like the reference); the per-file work itself is a
-distributed Spark job. With millions of small files you would instead group
-valid files by header signature and process each group as ONE job with
-``_metadata.file_path`` lineage — ``transform_group`` implements that path.
+is its own commit unit, like the reference). A file costs the Spark jobs of
+its writes only — the two appends, the merge and the control rows; the
+header peek, the schema and the ok/error counts add none — so at small files
+that fixed per-job cost dominates. With millions of small files you would
+instead group valid files by header signature and process each group as ONE
+job with ``_metadata.file_path`` lineage — ``transform_group`` implements
+that path.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from pipeline_etl_website_visits_spark.etl import schema as S
 from pipeline_etl_website_visits_spark.etl import transform as T
@@ -67,10 +71,29 @@ def read_header(spark: SparkSession, filepath: str) -> list[str]:
     return next(csv.reader(io.StringIO(line)), [])
 
 
-def read_report(spark: SparkSession, filepath: str) -> DataFrame:
+def _safe_header(header: list[str]) -> list[str]:
+    """Column names Spark's CSV reader derives from a header line: an empty
+    name becomes ``_c<index>`` and every copy of a (case-insensitively)
+    repeated name gets its index appended."""
+    lower = [c.lower() for c in header if c]
+    dups = {c for c in lower if lower.count(c) > 1}
+    return [
+        f"_c{i}" if not c else f"{c}{i}" if c.lower() in dups else c
+        for i, c in enumerate(header)
+    ]
+
+
+def read_report(spark: SparkSession, filepath: str, header: list[str] | None = None) -> DataFrame:
     """S3: header-ful CSV scan, all columns as raw strings, projected to the
-    declared layout (extra columns tolerated and dropped)."""
-    df = spark.read.option("header", True).option("inferSchema", False).csv(filepath)
+    declared layout by name (extra columns tolerated and dropped).
+
+    The all-string schema is built from ``header`` (read with
+    :func:`read_header` when not given), so the scan needs no schema
+    inference job."""
+    if header is None:
+        header = read_header(spark, filepath)
+    schema = StructType([StructField(c, StringType()) for c in _safe_header(header)])
+    df = spark.read.option("header", True).schema(schema).csv(filepath)
     return df.select(*[F.col(f"`{c}`") for c in S.VALID_COLUMNS])
 
 
@@ -95,6 +118,13 @@ def process_file(
 ) -> FileResult:
     """Full per-file ETL: validate layout → transform → load → bitacora.
 
+    Spark jobs run only inside the :class:`Warehouse` writes: the ok/error
+    counts for the trail and the bitacora row come back from the
+    estadisticas/errores appends (:meth:`Warehouse.append_rows`), and nothing
+    is cached. (Not a :class:`pyspark.sql.Observation`: on Spark 4.1 its
+    first use leaves the session unserializable, which breaks later ML
+    closures that capture the session.)
+
     O6: every stage appends to a per-file event buffer, flushed as ONE
     parquet append at the end of the file's run (success or failure) — the
     structured replacement for the reference's logs/DDMMYY/<file>.log.
@@ -111,18 +141,13 @@ def process_file(
         return FileResult(filename, S.STATUS_LAYOUT_FAIL, missing_columns=missing, extra_columns=extra)
     trail.append((filename, "LAYOUT", "INFO", "layout ok"))
     try:
-        raw = read_report(spark, filepath)
+        raw = read_report(spark, filepath, header)
         stats, visitors, errores = T.transform_file(raw, filename)
-        stats = stats.cache()
-        errores = errores.cache()
-        ok_count = stats.count()
-        err_count = errores.count()
+        ok_count = warehouse.append_rows(stats, "estadisticas", filename)
+        err_count = warehouse.append_rows(errores, "errores", filename)
         trail.append(
             (filename, "TRANSFORMADO", "INFO", f"ok={ok_count} errores={err_count}")
         )
-
-        warehouse.append_partitioned(stats, "estadisticas")
-        warehouse.append_partitioned(errores, "errores")
         # redo-safety: if a prior run crashed AFTER merging this file into
         # visitantes but BEFORE the bitacora marker, the snapshot manifest
         # already lists the file — re-applying would double-count. An explicit
@@ -143,12 +168,10 @@ def process_file(
         trail.append((filename, "CARGADO", "INFO", status))
         _flush_trail(warehouse, trail)
         trail = []  # flushed — the except path appends only its own suffix
-        warehouse.log_bitacora(filename, ok_count, err_count, status)  # commit marker, last
-        stats.unpersist()
-        errores.unpersist()
+        warehouse.log_bitacora([(filename, ok_count, err_count, status)])  # commit marker, last
         return FileResult(filename, status, ok_count, err_count, extra_columns=extra)
     except Exception as e:  # noqa: BLE001 — per-file isolation (O4)
-        warehouse.log_bitacora(filename, 0, 0, S.STATUS_SYSTEM_FAIL)
+        warehouse.log_bitacora([(filename, 0, 0, S.STATUS_SYSTEM_FAIL)])
         trail.append((filename, "FALLO", "ERROR", f"{type(e).__name__}: {e}"))
         _flush_trail(warehouse, trail)  # unflushed prefix + the FALLO row
         return FileResult(filename, S.STATUS_SYSTEM_FAIL)
@@ -157,7 +180,7 @@ def process_file(
 def validate_layout_or_log(warehouse: Warehouse, filename: str, header: list[str]):
     ok_layout, missing, extra = T.validate_layout(header)
     if not ok_layout:
-        warehouse.log_bitacora(filename, 0, 0, S.STATUS_LAYOUT_FAIL)
+        warehouse.log_bitacora([(filename, 0, 0, S.STATUS_LAYOUT_FAIL)])
     return ok_layout, missing, extra
 
 

@@ -21,7 +21,9 @@ sink therefore keys its non-idempotent effects on ``batch_id``:
 estadisticas/errores use per-file dynamic partition overwrite (idempotent),
 the additive visitantes merge is skipped when ``batch:<id>`` is already in
 the snapshot's ``_applied`` manifest, and bitacora rows are skipped for
-files that already carry a completion marker. Replays are thus no-ops.
+files that already carry a completion marker. A batch's bitacora rows (ok
+and layout-fail alike) are written last, as one append, so a crash leaves
+all of them or none. Replays are thus no-ops.
 """
 
 from __future__ import annotations
@@ -70,13 +72,13 @@ def _process_micro_batch(warehouse: Warehouse, process_date: str | None):
             ok_layout, _, _ = T.validate_layout(read_header(spark, p))
             if not ok_layout:
                 bad_files.append(p.rsplit("/", 1)[-1])
-        for fname in sorted(bad_files):
-            if fname not in marked:
-                warehouse.log_bitacora(fname, 0, 0, S.STATUS_LAYOUT_FAIL)
+        # every bitacora row of the batch goes out as ONE append at the end
+        markers = [(f, 0, 0, S.STATUS_LAYOUT_FAIL) for f in sorted(bad_files) if f not in marked]
         batch_df = batch_df.drop("__path")
         if bad_files:
             batch_df = batch_df.filter(~F.col("nombreArchivo").isin(bad_files))
             if batch_df.isEmpty():
+                warehouse.log_bitacora(markers)
                 return
         flagged = T.with_validity_flags(batch_df)
         ok, bad = T.split_valid_invalid(flagged)
@@ -99,7 +101,8 @@ def _process_micro_batch(warehouse: Warehouse, process_date: str | None):
                 continue  # replay: completion marker already written
             e = int(err_counts.get(fname, 0))
             status = S.STATUS_OK_WITH_ERRORS if e > 0 else S.STATUS_OK
-            warehouse.log_bitacora(fname, int(ok_counts.get(fname, 0)), e, status)
+            markers.append((fname, int(ok_counts.get(fname, 0)), e, status))
+        warehouse.log_bitacora(markers)
         stats.unpersist()
         errores.unpersist()
 

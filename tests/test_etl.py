@@ -242,3 +242,135 @@ def test_per_file_log_trail(spark, report_dir, tmp_path, monkeypatch):
 
     # trail rows carry the DDMMYY partition the reference used for log dirs
     assert all(len(r["fecha"]) == 6 for r in crashed)
+
+
+def test_control_rows_are_jvm_local(spark, tmp_path, monkeypatch):
+    """The trail and bitacora appends (and the empty-snapshot frame) are
+    planned without an RDD scan of Python rows, so no Python worker runs
+    for a one-row control write."""
+    from pyspark.sql import DataFrameWriter
+
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        written.append((os.path.basename(path), self._df))
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.log_file_events([("f.txt", "RECIBIDO", "INFO", "x"), ("f.txt", "CARGADO", "INFO", "y")])
+    wh.log_bitacora([("f.txt", 3, 1, S.STATUS_OK_WITH_ERRORS), ("g.txt", 0, 0, S.STATUS_LAYOUT_FAIL)])
+    assert [name for name, _ in written] == ["logs", "bitacora"]
+    frames = [df for _, df in written] + [wh.read_visitantes()]
+    for df in frames:
+        qe = df._jdf.queryExecution()
+        plan = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+        for python_scan in ("ExistingRDD", "LogicalRDD", "PythonRDD"):
+            assert python_scan not in plan, plan
+
+    bit = {r["nombreArchivo"]: r for r in wh.read("bitacora").collect()}
+    assert (bit["f.txt"]["registrosExitosos"], bit["f.txt"]["registrosFallidos"]) == (3, 1)
+    assert bit["g.txt"]["estatus"] == S.STATUS_LAYOUT_FAIL
+    assert bit["g.txt"]["fechaProceso"] is not None
+    trail = [(r["etapa"], r["mensaje"]) for r in wh.file_log("f.txt").collect()]
+    assert trail == [("RECIBIDO", "x"), ("CARGADO", "y")]
+    assert wh.read_visitantes().count() == 0
+
+
+def test_process_file_runs_jobs_only_in_warehouse_writes(spark, report_dir, tmp_path, monkeypatch):
+    """process_file itself schedules no Spark job (no schema inference, no
+    count()) and caches nothing: every job of a file runs inside a
+    Warehouse call, and the counts come back from the appends."""
+    import functools
+
+    def next_job():
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+    inside = [0]
+
+    def counted(fn):
+        @functools.wraps(fn)
+        def wrapper(*args, **kwargs):
+            j0 = next_job()
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                inside[0] += next_job() - j0
+
+        return wrapper
+
+    for attr in ("append_rows", "merge_visitantes", "visitantes_applied",
+                 "log_bitacora", "log_file_events"):
+        monkeypatch.setattr(Warehouse, attr, counted(getattr(Warehouse, attr)))
+    path = FX.make_mixed(report_dir)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    spark.catalog.clearCache()
+    j0 = next_job()
+    res = process_file(spark, wh, path, process_date="2026-03-28")
+    outside = next_job() - j0 - inside[0]
+    assert (res.status, res.ok_count, res.err_count) == (S.STATUS_OK_WITH_ERRORS, 70, 50)
+    assert inside[0] > 0
+    assert outside == 0  # no schema inference job, no count() actions
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    trail = {r["etapa"]: r["mensaje"] for r in wh.file_log("report_mixed.txt").collect()}
+    assert trail["TRANSFORMADO"] == "ok=70 errores=50"
+    # the session stays serializable: ML closures that capture it still ship
+    spark.sparkContext._jvm.org.apache.spark.util.Utils.serialize(spark._jsparkSession)
+
+
+def test_append_rows_counts_what_the_write_added(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    key = "report_a b:1.txt"  # escaped in the partition dir name
+    rows = spark.range(7).select(F.col("id"), F.lit(key).alias("nombreArchivo"))
+    assert wh.append_rows(rows.repartition(3), "t", key) == 7
+    assert wh.append_rows(rows.limit(4), "t", key) == 4  # overwrite: the new files only
+    assert wh.append_rows(rows.limit(0), "t", key) == 0  # no rows: old partition stays
+    assert wh.read("t").count() == 4
+
+
+def test_reordered_header_maps_by_name(spark, report_dir, tmp_path):
+    """Columns are matched by header name, not position."""
+    rows = [FX.valid_row(i) for i in range(20)]
+    rows[3][0] = "not-an-email"
+    order = list(reversed(range(len(FX.HEADER))))
+    FX.write_csv(os.path.join(report_dir, "report_a.txt"), FX.HEADER, rows)
+    FX.write_csv(
+        os.path.join(report_dir, "report_b.txt"),
+        [FX.HEADER[j] for j in order],
+        [[r[j] for j in order] for r in rows],
+    )
+    results = process_directory(spark, report_dir, str(tmp_path / "wh"), process_date="2026-03-28")
+    assert [(r.status, r.ok_count, r.err_count) for r in results] == [
+        (S.STATUS_OK_WITH_ERRORS, 19, 1)
+    ] * 2
+    stats = Warehouse(spark, str(tmp_path / "wh")).read("estadisticas")
+
+    def rows_of(name):
+        return sorted(
+            tuple(r) for r in stats.filter(F.col("nombreArchivo") == name).drop("nombreArchivo").collect()
+        )
+
+    assert rows_of("report_a.txt") == rows_of("report_b.txt")
+
+
+def test_duplicated_header_column_status(spark, report_dir, tmp_path):
+    """A repeated declared column is a system failure (Spark renames both
+    copies, so the declared name no longer resolves); a repeated extra
+    column is tolerated like any extra column."""
+    rows = [FX.valid_row(i) for i in range(5)]
+    FX.write_csv(
+        os.path.join(report_dir, "report_dupdecl.txt"),
+        FX.HEADER + ["email"],
+        [r + [r[0]] for r in rows],
+    )
+    FX.write_csv(
+        os.path.join(report_dir, "report_dupextra.txt"),
+        FX.HEADER + ["Extra", "extra"],
+        [r + ["x", "y"] for r in rows],
+    )
+    results = process_directory(spark, report_dir, str(tmp_path / "wh"), process_date="2026-03-28")
+    by_name = {r.filename: r for r in results}
+    assert by_name["report_dupdecl.txt"].status == S.STATUS_SYSTEM_FAIL
+    assert by_name["report_dupextra.txt"].status == S.STATUS_OK
+    assert by_name["report_dupextra.txt"].ok_count == 5

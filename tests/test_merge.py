@@ -167,6 +167,30 @@ def test_incremental_merge_pruned_read(spark, tmp_path, target, source):
     assert len(emails) < 4  # strictly fewer rows than the full snapshot
 
 
+def test_merge_writes_one_file_per_bucket(spark, tmp_path, target, source):
+    """Every bucket dir a publish writes holds exactly one parquet file,
+    however many partitions the merged frame arrives in."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root, n_buckets=4)
+    many = spark.range(200).select(
+        F.concat(F.lit("u"), F.col("id").cast("string"), F.lit("@example.com")).alias("email"),
+        F.lit(D(2026, 8, 1)).alias("fechaPrimeraVisita"),
+        F.lit(D(2026, 8, 2)).alias("fechaUltimaVisita"),
+        F.lit(1).cast("long").alias("visitasTotales"),
+        F.lit(1).cast("long").alias("visitasAnioActual"),
+        F.lit(1).cast("long").alias("visitasMesActual"),
+    ).repartition(8)
+    wh.write_visitantes(target.unionByName(many), applied_key="seed")
+    wh.merge_visitantes(source.unionByName(many), process_date=PROCESS_DATE, applied_key="b1")
+    for version in wh.visitantes_versions():
+        buckets = _bucket_dirs(root, version)
+        assert len(buckets) == 4
+        for b in buckets:
+            files = [f for f in os.listdir(os.path.join(root, version, b)) if f.endswith(".parquet")]
+            assert len(files) == 1, (version, b, files)
+    assert wh.read_visitantes().count() == 205
+
+
 def test_legacy_flat_snapshot_upgrades_to_bucketed(spark, tmp_path, target, source):
     """A snapshot written by the pre-bucketed layout (flat dir, no _buckets
     manifest) must keep working: first merge does a one-time full rebucket."""
