@@ -13,11 +13,11 @@ parquet table directories under a warehouse root:
 Control schemas (``BITACORA_SCHEMA``, ``LOGS_SCHEMA``):
 
 - ``bitacora``: nombreArchivo string, registrosExitosos long,
-  registrosFallidos long, estatus string, fechaProceso timestamp. The batch
-  driver takes the two counts from the estadisticas/errores appends
+  registrosFallidos long, estatus string, fechaProceso timestamp. Both
+  drivers take the two counts from the estadisticas/errores appends
   themselves (:meth:`Warehouse.append_rows` reads the written files'
-  footers; no extra job); the stream driver writes all of a micro-batch's
-  rows as one append.
+  footers, per file; no extra job); the stream driver writes all of a
+  micro-batch's rows as one append.
 - ``logs``: nombreArchivo string, etapa string (RECIBIDO, LAYOUT,
   TRANSFORMADO, MERGE, CARGADO or FALLO), nivel string (INFO/ERROR),
   mensaje string, seq long (orders one flush's rows), plus fechaProceso
@@ -51,13 +51,14 @@ manifest reference.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
+from types import SimpleNamespace
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    ArrayType,
     DateType,
     LongType,
     StringType,
@@ -67,6 +68,7 @@ from pyspark.sql.types import (
 )
 
 from pipeline_etl_website_visits_spark.etl import schema as S
+from pipeline_etl_website_visits_spark.functions import sql_ident, sql_string
 
 BITACORA_SCHEMA = StructType(
     [
@@ -100,18 +102,64 @@ VISITANTES_SCHEMA = StructType(
 )
 
 
-def _jvm_rows(spark: SparkSession, schema: StructType, rows: list[tuple]) -> DataFrame:
-    """``rows`` (literals or Columns, in ``schema`` order) as a DataFrame
-    built in the JVM: ``inline`` over one literal array on a one-row range.
-    ``createDataFrame`` on a Python list plans an RDD scan whose task starts
-    a Python worker, which dominated the cost of a one-row control write."""
-    structs = [
-        F.struct(*[F.lit(v).cast(f.dataType) for v, f in zip(row, schema.fields)])
-        for row in rows
+# a logs row as written: LOGS_SCHEMA plus its two stamps
+_LOGS_ROW_SCHEMA = StructType(
+    LOGS_SCHEMA.fields
+    + [
+        StructField("fechaProceso", TimestampType(), False),
+        StructField("fecha", StringType(), False),
     ]
-    return spark.range(0, 1, 1, 1).select(
-        F.inline(F.array(*structs).cast(ArrayType(schema, containsNull=False)))
+)
+
+
+class _Sql(str):
+    """SQL text placed in a control row as is, not as a string literal."""
+
+
+_NOW = _Sql("current_timestamp()")
+_TODAY_DDMMYY = _Sql("date_format(current_date(), 'ddMMyy')")
+
+
+def _sql_value(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, _Sql):
+        return v
+    return str(v) if isinstance(v, int) else sql_string(v)
+
+
+def _jvm_rows(spark: SparkSession, schema: StructType, rows: list[tuple]) -> DataFrame:
+    """``rows`` (ints, strings, None or :class:`_Sql` text, in ``schema``
+    order) as a DataFrame built in the JVM from one SQL expression:
+    ``inline`` over an array of structs, each cast to ``schema``, on a
+    one-row range. ``createDataFrame`` on a Python list plans an RDD scan
+    whose task starts a Python worker, which dominated the cost of a one-row
+    control write.
+
+    The stamps (``current_timestamp()`` and the like) sit inside the array,
+    which the optimizer folds into one literal that generated code holds by
+    reference, so a repeat write compiles no new code. The per-struct cast
+    keeps ``schema``'s nullability (an array cast would make every field
+    nullable); with no rows the result is an empty local relation."""
+    if not rows:
+        jschema = spark._jsparkSession.parseDataType(schema.json())
+        jrows = spark._jvm.java.util.ArrayList()
+        return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)
+    fields = ", ".join(
+        f"{sql_ident(f.name)}: {f.dataType.simpleString()}{'' if f.nullable else ' NOT NULL'}"
+        for f in schema.fields
     )
+    structs = ", ".join(
+        f"CAST(struct({', '.join(map(_sql_value, row))}) AS STRUCT<{fields}>)" for row in rows
+    )
+    return spark.range(0, 1, 1, 1).selectExpr(f"inline(array({structs}))")
+
+
+def _bucket_sql(n_buckets: int) -> str:
+    # coalesce: hash(NULL) is NULL and a NULL bucket would fall out of
+    # every partition dir; valid rows always carry an email, but the
+    # layout must not depend on that.
+    return f"pmod(hash(coalesce(email, '')), {int(n_buckets)})"
 
 
 class Warehouse:
@@ -220,11 +268,25 @@ class Warehouse:
 
         ledger.publish_pointer(self._local(pointer), content)
 
-    def _fs(self, p: str):
+    @functools.cached_property
+    def _jclasses(self) -> SimpleNamespace:
+        """The JVM classes and Hadoop conf the warehouse uses, looked up
+        once: every hop of ``jvm.org.apache...`` is a py4j round trip."""
         jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        return hpath.getFileSystem(conf), hpath, jvm
+        return SimpleNamespace(
+            jvm=jvm,
+            conf=self.spark._jsc.hadoopConfiguration(),
+            Path=jvm.org.apache.hadoop.fs.Path,
+            IOUtils=jvm.org.apache.commons.io.IOUtils,
+            escapePathName=jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName,
+            ParquetFileReader=jvm.org.apache.parquet.hadoop.ParquetFileReader,
+            HadoopInputFile=jvm.org.apache.parquet.hadoop.util.HadoopInputFile,
+        )
+
+    def _fs(self, p: str):
+        j = self._jclasses
+        hpath = j.Path(p)
+        return hpath.getFileSystem(j.conf), hpath, j.jvm
 
     def _exists(self, table: str) -> bool:
         fs, hpath, _ = self._fs(self.path(table))
@@ -405,37 +467,38 @@ class Warehouse:
             .parquet(self.path(table))
         )
 
-    def append_rows(self, df: DataFrame, table: str, key: str) -> int:
-        """:meth:`append_partitioned` for the rows of one nombreArchivo
-        ``key``, returning how many rows the write added. The count is summed
-        from the parquet footers of the files the write put in the key's
-        partition — driver-side metadata reads, no Spark job. Files that were
-        there before the write belong to an earlier run: a write with no rows
-        leaves the old partition in place, and adds 0."""
-        jvm = self.spark._jvm
-        escaped = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(key)
-        fs, part, _ = self._fs(os.path.join(self.path(table), f"nombreArchivo={escaped}"))
+    def append_rows(self, df: DataFrame, table: str, keys: list[str]) -> dict[str, int]:
+        """:meth:`append_partitioned` for rows whose nombreArchivo is one of
+        ``keys``, returning how many rows the write added to each key's
+        partition. The counts are summed from the parquet footers of the
+        files the write put there — driver-side metadata reads, no Spark
+        job. Files that were there before the write belong to an earlier
+        run: a write with no rows for a key leaves its old partition in
+        place, and adds 0."""
+        j = self._jclasses
+        parts = {
+            k: self._fs(os.path.join(self.path(table), f"nombreArchivo={j.escapePathName(k)}"))
+            for k in keys
+        }
 
-        def files() -> dict:
+        def files(fs, part) -> dict:
             if not fs.exists(part):
                 return {}
             return {str(st.getPath().getName()): st for st in fs.listStatus(part)}
 
-        before = files()
+        before = {k: files(fs, part) for k, (fs, part, _) in parts.items()}
         self.append_partitioned(df, table)
-        conf = self.spark._jsc.hadoopConfiguration()
-        rows = 0
-        for name, st in files().items():
-            if name in before or not name.endswith(".parquet"):
-                continue
-            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-            )
-            try:
-                rows += reader.getRecordCount()
-            finally:
-                reader.close()
-        return rows
+        counts = dict.fromkeys(keys, 0)
+        for k, (fs, part, _) in parts.items():
+            for name, st in files(fs, part).items():
+                if name in before[k] or not name.endswith(".parquet"):
+                    continue
+                reader = j.ParquetFileReader.open(j.HadoopInputFile.fromStatus(st, j.conf))
+                try:
+                    counts[k] += reader.getRecordCount()
+                finally:
+                    reader.close()
+        return counts
 
     # -- small-file compaction (SURVEY §4.3: one parquet file per micro-batch
     #    otherwise) ----------------------------------------------------------
@@ -520,7 +583,7 @@ class Warehouse:
             df = df.filter(~F.coalesce(drop_where, F.lit(False)))
 
         # size the output: total bytes of both regions / target_mb
-        fs, tpath, jvm = self._fs(self.path(table))
+        fs, _, _ = self._fs(self.path(table))
         total = 0
         for p in ([self.path(table)] if live else []) + ([self.path(prev)] if prev else []):
             _, hp, _ = self._fs(p)
@@ -562,7 +625,7 @@ class Warehouse:
 
         # GC: absorbed live partitions and the pre-previous compact version
         for fname in live:
-            part = jvm.org.apache.hadoop.fs.Path(
+            part = self._jclasses.Path(
                 os.path.join(self.path(table), f"nombreArchivo={fname}")
             )
             if fs.exists(part):
@@ -607,21 +670,17 @@ class Warehouse:
         return [ln.strip() for ln in txt.splitlines() if ln.strip()]
 
     def _read_small_text(self, p: str) -> list[str] | None:
-        fs, hpath, jvm = self._fs(p)
+        """Non-blank lines of a manifest, read in one JVM call (the
+        ``_applied`` manifest gains a line per committed file)."""
+        fs, hpath, _ = self._fs(p)
         if not fs.exists(hpath):
             return None
         stream = fs.open(hpath)
-        lines: list[str] = []
         try:
-            reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
-            line = reader.readLine()
-            while line is not None:
-                if line.strip():
-                    lines.append(line.strip())
-                line = reader.readLine()
+            text = self._jclasses.IOUtils.toString(stream, "UTF-8")
         finally:
             stream.close()
-        return lines
+        return [ln.strip() for ln in re.split(r"\r\n?|\n", text) if ln.strip()]
 
     def _write_small_text(self, p: str, content: str) -> None:
         fs, hpath, _ = self._fs(p)
@@ -664,10 +723,7 @@ class Warehouse:
         return f"visitantes_b{self._root_tag()}_v{n}"
 
     def _bucket_col(self, n_buckets: int):
-        # coalesce: hash(NULL) is NULL and a NULL bucket would fall out of
-        # every partition dir; valid rows always carry an email, but the
-        # layout must not depend on that.
-        return F.pmod(F.hash(F.coalesce(F.col("email"), F.lit(""))), F.lit(n_buckets))
+        return F.expr(_bucket_sql(n_buckets))
 
     def _visitantes_manifest(self, version: str) -> tuple[int, dict[int, str]] | None:
         """(n_buckets, {bucket -> version dir holding it}) or None (legacy
@@ -739,7 +795,7 @@ class Warehouse:
                 n_buckets, refs = manifest
                 b = (
                     _jvm_rows(self.spark, StructType([VISITANTES_SCHEMA["email"]]), [(email,)])
-                    .select(self._bucket_col(n_buckets).alias("b"))
+                    .selectExpr(f"{_bucket_sql(n_buckets)} AS b")
                     .collect()[0]["b"]
                 )
                 subset = self.read_visitantes(buckets={b}).filter(
@@ -931,11 +987,10 @@ class Warehouse:
             self._write_visitantes_locked(merged, applied_key=applied_key)
             return
         n_buckets, refs = manifest if manifest else (self.n_buckets, {})
-        bucket = self._bucket_col(n_buckets)
         # touched buckets: bounded driver-side collect (≤ n_buckets values)
         touched = {
             int(r[0])
-            for r in source.select(bucket.alias("b")).distinct().collect()
+            for r in source.selectExpr(f"{_bucket_sql(n_buckets)} AS b").distinct().collect()
         }
         if not touched:
             return
@@ -1006,7 +1061,7 @@ class Warehouse:
         table = self._bucketed_table_name(n)
         self.spark.sql(f"DROP TABLE IF EXISTS {table}")
         (
-            df.withColumn("bucket", self._bucket_col(n_buckets).cast("int"))
+            df.withColumn("bucket", self._bucket_col(n_buckets))
             .write.format("parquet")
             .partitionBy("bucket")
             .bucketBy(n_buckets, "email")
@@ -1174,10 +1229,11 @@ class Warehouse:
         base_seq = int(time.time() * 1000) * 1000  # flush epoch-ms, 1000 slots
         rows = _jvm_rows(
             self.spark,
-            LOGS_SCHEMA,
-            [(f, e, lv, m, base_seq + i) for i, (f, e, lv, m) in enumerate(events)],
-        ).withColumn("fechaProceso", F.current_timestamp()).withColumn(
-            "fecha", F.date_format(F.current_date(), "ddMMyy")
+            _LOGS_ROW_SCHEMA,
+            [
+                (f, e, lv, m, base_seq + i, _NOW, _TODAY_DDMMYY)
+                for i, (f, e, lv, m) in enumerate(events)
+            ],
         )
         rows.write.mode("append").partitionBy("fecha").parquet(self.path("logs"))
 
@@ -1194,7 +1250,7 @@ class Warehouse:
         append, so a micro-batch's markers land all together or not at all."""
         if not rows:
             return
-        stamped = [(*r, F.current_timestamp()) for r in rows]
+        stamped = [(*r, _NOW) for r in rows]
         _jvm_rows(self.spark, BITACORA_SCHEMA, stamped).write.mode("append").parquet(
             self.path("bitacora")
         )

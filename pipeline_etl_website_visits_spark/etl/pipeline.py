@@ -24,13 +24,16 @@ import io
 import os
 from dataclasses import dataclass, field
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from pipeline_etl_website_visits_spark.etl import schema as S
 from pipeline_etl_website_visits_spark.etl import transform as T
 from pipeline_etl_website_visits_spark.etl.load import Warehouse
+from pipeline_etl_website_visits_spark.functions import sql_ident
+
+# the declared layout, projected by name in one selectExpr
+_LAYOUT_SQL = [sql_ident(c) for c in S.VALID_COLUMNS]
 
 
 @dataclass
@@ -94,7 +97,7 @@ def read_report(spark: SparkSession, filepath: str, header: list[str] | None = N
         header = read_header(spark, filepath)
     schema = StructType([StructField(c, StringType()) for c in _safe_header(header)])
     df = spark.read.option("header", True).schema(schema).csv(filepath)
-    return df.select(*[F.col(f"`{c}`") for c in S.VALID_COLUMNS])
+    return df.selectExpr(*_LAYOUT_SQL)
 
 
 def _flush_trail(warehouse: Warehouse, trail: list[tuple[str, str, str, str]]) -> None:
@@ -143,8 +146,8 @@ def process_file(
     try:
         raw = read_report(spark, filepath, header)
         stats, visitors, errores = T.transform_file(raw, filename)
-        ok_count = warehouse.append_rows(stats, "estadisticas", filename)
-        err_count = warehouse.append_rows(errores, "errores", filename)
+        ok_count = warehouse.append_rows(stats, "estadisticas", [filename])[filename]
+        err_count = warehouse.append_rows(errores, "errores", [filename])[filename]
         trail.append(
             (filename, "TRANSFORMADO", "INFO", f"ok={ok_count} errores={err_count}")
         )
@@ -253,11 +256,12 @@ def transform_group(spark: SparkSession, filepaths: list[str]) -> tuple[DataFram
     one aggregate over nombreArchivo instead of N count() actions.
     """
     df = spark.read.option("header", True).option("inferSchema", False).csv(filepaths)
-    fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-    raw = df.select(*[F.col(f"`{c}`") for c in S.VALID_COLUMNS], fname.alias("nombreArchivo"))
+    raw = df.selectExpr(
+        *_LAYOUT_SQL, "element_at(split(_metadata.file_path, '/'), -1) AS nombreArchivo"
+    )
     flagged = T.with_validity_flags(raw)
     ok, bad = T.split_valid_invalid(flagged)
-    errores = T.expand_errors(bad, F.col("nombreArchivo")).select("nombreArchivo", "email", "tipoError")
+    errores = T.expand_errors(bad, "nombreArchivo")
     # normalize_and_cast passes unknown columns (nombreArchivo) through.
     stats = T.normalize_and_cast(ok)
     return stats, errores

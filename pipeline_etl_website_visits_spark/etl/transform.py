@@ -7,6 +7,11 @@ normalize/rename/cast → per-email aggregate. Everything below is a lazy
 DataFrame lineage: one CSV scan feeds both branches, Catalyst prunes and
 pushes down, the only wide op is the per-email aggregate.
 
+Each step is one projection whose expressions are SQL text built once, at
+import: every classic ``Column`` call costs about a dozen py4j round trips
+(call-site capture included), so a step the JVM parses in one call builds
+several times faster than the same step sent Column by Column.
+
 Defect rulings applied (SURVEY §0.1): D6 (cast on renamed columns),
 D7 (cast ints first, null-normalize "-"/"0" for string columns only, keep
 int 0), D20 (first/last visit dates from the batch's fechaEnvio min/max).
@@ -15,11 +20,11 @@ int 0), D20 (first/last visit dates from the batch's fechaEnvio min/max).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 from pipeline_etl_website_visits_spark.etl import schema as S
+from pipeline_etl_website_visits_spark.functions import sql_ident, sql_string
 
-_FLAG_COLS = ["valid_email", "valid_fecha_envio", "valid_fecha_open", "valid_fecha_click", "is_valid"]
 _DATE_FLAG_BY_COL = {
     "Fecha envio": "valid_fecha_envio",
     "Fecha open": "valid_fecha_open",
@@ -40,79 +45,103 @@ def validate_layout(columns: list[str]) -> tuple[bool, list[str], list[str]]:
     return (not missing, missing, extra)
 
 
-def _email_valid(col: Column) -> Column:
+def _email_valid(col: str) -> str:
     # notna ∧ trim≠"" ∧ regex (utils/utils_transform.py:112-116).
-    t = F.trim(col)
-    return col.isNotNull() & (t != "") & t.rlike(S.EMAIL_PATTERN)
+    c = sql_ident(col)
+    return (
+        f"({c} IS NOT NULL AND trim({c}) != '' "
+        f"AND trim({c}) RLIKE {sql_string(S.EMAIL_PATTERN)})"
+    )
 
 
-def _date_valid(col: Column) -> Column:
+def _date_valid(col: str) -> str:
     # NULL is valid; non-null must be non-blank and strict-format
     # (utils/utils_transform.py:121-129).
-    t = F.trim(col)
-    return col.isNull() | ((t != "") & t.rlike(S.DATE_PATTERN))
+    c = sql_ident(col)
+    return f"({c} IS NULL OR (trim({c}) != '' AND trim({c}) RLIKE {sql_string(S.DATE_PATTERN)}))"
+
+
+_FLAGS = {"valid_email": _email_valid("email")} | {
+    flag: _date_valid(src) for src, flag in _DATE_FLAG_BY_COL.items()
+}
+_FLAGS_SQL = [f"{e} AS {flag}" for flag, e in _FLAGS.items()] + [
+    f"({' AND '.join(_FLAGS.values())}) AS is_valid"
+]
+_FLAG_COLS = [*_FLAGS, "is_valid"]
+
+_CHECKS_SQL = (
+    "explode(filter(array("
+    + ", ".join(
+        f"CASE WHEN NOT {flag} THEN {sql_string(label)} END"
+        for flag, label in zip(_FLAGS, S.ERROR_TYPES)
+    )
+    + "), x -> x IS NOT NULL)) AS tipoError"
+)
+
+
+def _normalized(src: str) -> str:
+    # D7: strings trim then map "-"/"0"/"" to NULL, dates parse strictly,
+    # ints cast directly; keyed on the renamed column (D6).
+    dst = S.COLUMNS_TO_MAP[src]
+    c = sql_ident(src)
+    if dst in S.STR_COLUMNS:
+        e = f"CASE WHEN trim({c}) IN ('-', '0') OR trim({c}) = '' THEN NULL ELSE trim({c}) END"
+    elif dst in S.TS_COLUMNS:
+        e = f"to_timestamp(trim({c}), {sql_string(S.DATE_FORMAT)})"
+    elif dst in S.INT_COLUMNS:
+        e = f"CAST({c} AS INT)"
+    else:
+        e = c
+    return f"{e} AS {sql_ident(dst)}"
+
+
+_NORMALIZED = {c: _normalized(c) for c in S.VALID_COLUMNS}
+
+_VISITORS_AGG = [
+    "count(*) AS visitasTotales",
+    "count(*) AS visitasAnioActual",
+    "count(*) AS visitasMesActual",
+    "coalesce(min(CAST(fechaEnvio AS DATE)), current_date()) AS fechaPrimeraVisita",
+    "coalesce(max(CAST(fechaEnvio AS DATE)), current_date()) AS fechaUltimaVisita",
+]
 
 
 def with_validity_flags(df: DataFrame) -> DataFrame:
     """Add valid_email / valid_fecha_* / is_valid boolean columns (F1-F3)."""
-    out = df.withColumn("valid_email", _email_valid(F.col("email")))
-    for src, flag in _DATE_FLAG_BY_COL.items():
-        out = out.withColumn(flag, _date_valid(F.col(src)))
-    date_flags = [F.col(f) for f in _DATE_FLAG_BY_COL.values()]
-    is_valid = F.col("valid_email")
-    for f in date_flags:
-        is_valid = is_valid & f
-    return out.withColumn("is_valid", is_valid)
+    return df.selectExpr("*", *_FLAGS_SQL)
 
 
 def split_valid_invalid(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     """F4: two filtered branches of one lineage (utils/utils_transform.py:135-136)."""
-    return flagged.filter(F.col("is_valid")), flagged.filter(~F.col("is_valid"))
+    return flagged.filter("is_valid"), flagged.filter("NOT is_valid")
 
 
-def expand_errors(invalid: DataFrame, filename_col: Column) -> DataFrame:
+def expand_errors(invalid: DataFrame, filename_sql: str) -> DataFrame:
     """E1: one output row per failed check, vectorized.
 
     The reference iterates rows in Python (utils/utils_transform.py:143-165);
-    here it is array(when...) → filter nulls → explode — fully codegen'd.
-    Output: (nombreArchivo, email, tipoError).
+    here it is array(CASE...) → filter nulls → explode — fully codegen'd.
+    ``filename_sql`` is the SQL text of the file name: a column name or a
+    :func:`sql_string` literal. Output: (nombreArchivo, email, tipoError).
     """
-    checks = F.array(
-        F.when(~F.col("valid_email"), F.lit("Email")),
-        F.when(~F.col("valid_fecha_envio"), F.lit("Fecha envio")),
-        F.when(~F.col("valid_fecha_open"), F.lit("Fecha open")),
-        F.when(~F.col("valid_fecha_click"), F.lit("Fecha click")),
-    )
-    failed = F.filter(checks, lambda x: x.isNotNull())
-    return invalid.select(
-        filename_col.alias("nombreArchivo"),
-        F.col("email"),
-        F.explode(failed).alias("tipoError"),
-    )
+    return invalid.selectExpr(f"{filename_sql} AS nombreArchivo", "email", _CHECKS_SQL)
 
 
-def normalize_and_cast(valid: DataFrame) -> DataFrame:
-    """P1-P5: rename → trim/null-normalize strings → cast dates and ints.
+def normalize_and_cast(valid: DataFrame, filename_sql: str | None = None) -> DataFrame:
+    """P1-P5: rename → trim/null-normalize strings → cast dates and ints,
+    in one projection; unknown columns pass through unchanged, the flag
+    columns are dropped, and ``filename_sql`` (SQL text, as in
+    :func:`expand_errors`) is appended as nombreArchivo when given.
 
     D7 ruling: int columns cast directly (unparseable → NULL, literal 0
     survives); string columns trim then map "-"/"0" → NULL; date columns
     parse strictly as dd/MM/yyyy HH:mm (unparseable → NULL, matching
     pandas errors="coerce").
     """
-    df = valid.drop(*[c for c in _FLAG_COLS if c in valid.columns])
-    df = df.withColumnsRenamed(S.COLUMNS_TO_MAP)
-    exprs: list[Column] = []
-    for c in df.columns:
-        if c in S.STR_COLUMNS:
-            t = F.trim(F.col(c))
-            exprs.append(F.when(t.isin("-", "0") | (t == ""), None).otherwise(t).alias(c))
-        elif c in S.TS_COLUMNS:
-            exprs.append(F.to_timestamp(F.trim(F.col(c)), S.DATE_FORMAT).alias(c))
-        elif c in S.INT_COLUMNS:
-            exprs.append(F.col(c).cast("int").alias(c))
-        else:
-            exprs.append(F.col(c))
-    return df.select(*exprs)
+    exprs = [_NORMALIZED.get(c, sql_ident(c)) for c in valid.columns if c not in _FLAG_COLS]
+    if filename_sql is not None:
+        exprs.append(f"{filename_sql} AS nombreArchivo")
+    return valid.selectExpr(*exprs)
 
 
 def visitors_aggregate(stats: DataFrame) -> DataFrame:
@@ -122,14 +151,7 @@ def visitors_aggregate(stats: DataFrame) -> DataFrame:
     first/last visit dates derive from fechaEnvio min/max (D20 ruling),
     falling back to the current date when all fechaEnvio are NULL.
     """
-    today = F.current_date()
-    return stats.groupBy("email").agg(
-        F.count("*").cast("long").alias("visitasTotales"),
-        F.count("*").cast("long").alias("visitasAnioActual"),
-        F.count("*").cast("long").alias("visitasMesActual"),
-        F.coalesce(F.min(F.col("fechaEnvio").cast("date")), today).alias("fechaPrimeraVisita"),
-        F.coalesce(F.max(F.col("fechaEnvio").cast("date")), today).alias("fechaUltimaVisita"),
-    )
+    return stats.groupBy("email").agg(*map(F.expr, _VISITORS_AGG))
 
 
 def transform_file(raw: DataFrame, filename: str) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -140,7 +162,8 @@ def transform_file(raw: DataFrame, filename: str) -> tuple[DataFrame, DataFrame,
     """
     flagged = with_validity_flags(raw)
     ok, bad = split_valid_invalid(flagged)
-    errores = expand_errors(bad, F.lit(filename))
-    stats = normalize_and_cast(ok).withColumn("nombreArchivo", F.lit(filename))
+    name = sql_string(filename)
+    errores = expand_errors(bad, name)
+    stats = normalize_and_cast(ok, name)
     visitors = visitors_aggregate(stats)
     return stats, visitors, errores

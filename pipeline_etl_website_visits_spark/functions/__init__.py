@@ -29,6 +29,25 @@ def ratio_round(num: Column, den: Column, decimals: int) -> Column:
     return (q / F.lit(float(scale))).cast("double")
 
 
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal — the one escaping rule for text
+    spliced into SQL expressions.
+
+    With the default ``spark.sql.parser.escapedStringLiterals=false`` the
+    parser unescapes backslash sequences and drops a lone ``\\`` before any
+    other character, so a regex's ``\\d``, ``\\s`` or ``\\.`` would reach
+    the JVM without its backslash. Every backslash is therefore doubled and
+    every single quote escaped; nothing else needs escaping.
+    """
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backticked Spark SQL identifier (spaces and dots stay
+    part of the name)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # --------------------------------------------------------------------------
 # Pure-Python XXH64 — driver-side twin of Spark's xxhash64(string) so
 # index-serving paths can resolve hash buckets WITHOUT launching a Spark

@@ -17,11 +17,16 @@ rows must surface — so it shuffles; bucketing both sides removes that);
 the target is only rewritten where keys changed — at scale the target
 would be bucketed by the merge key so re-runs shuffle nothing, or backed
 by Delta's MERGE INTO which has identical semantics.
+
+:func:`visitantes_merge` writes its projections and join condition as SQL
+text, because each classic ``Column`` call costs about a dozen py4j round
+trips, and the merge is built once per committed file.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from datetime import date
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -87,6 +92,47 @@ def merge_upsert(
     return joined.select(*out)
 
 
+_VISITANTES_COLS = [
+    "email",
+    "fechaPrimeraVisita",
+    "fechaUltimaVisita",
+    "visitasTotales",
+    "visitasAnioActual",
+    "visitasMesActual",
+]
+_TARGET_SQL = [f"{c} AS t_{c}" for c in _VISITANTES_COLS]
+_SOURCE_SQL = [f"{c} AS s_{c}" for c in _VISITANTES_COLS]
+
+
+def _period_counter(c: str, same_period: str) -> str:
+    # add when matched within the current period, else restart from the
+    # batch (or keep the target when the batch lacks the key)
+    return (
+        f"CAST(CASE WHEN t_email IS NOT NULL AND s_email IS NOT NULL AND {same_period} "
+        f"THEN coalesce(t_{c}, 0) + coalesce(s_{c}, 0) "
+        f"ELSE coalesce(s_{c}, t_{c}, 0) END AS BIGINT) AS {c}"
+    )
+
+
+def _merged_sql(cur: str) -> list[str]:
+    same_year = f"year(t_fechaUltimaVisita) = year({cur})"
+    same_ym = f"{same_year} AND month(t_fechaUltimaVisita) = month({cur})"
+    return [
+        "coalesce(t_email, s_email) AS email",
+        # D22: first visit never changes once set.
+        "coalesce(t_fechaPrimeraVisita, s_fechaPrimeraVisita) AS fechaPrimeraVisita",
+        "greatest(coalesce(t_fechaUltimaVisita, s_fechaUltimaVisita), "
+        "coalesce(s_fechaUltimaVisita, t_fechaUltimaVisita)) AS fechaUltimaVisita",
+        "CAST(coalesce(t_visitasTotales, 0) + coalesce(s_visitasTotales, 0) AS BIGINT) "
+        "AS visitasTotales",
+        _period_counter("visitasAnioActual", same_year),
+        _period_counter("visitasMesActual", same_ym),
+    ]
+
+
+_MERGED_TODAY_SQL = _merged_sql("current_date()")
+
+
 def visitantes_merge(
     target: DataFrame,
     source: DataFrame,
@@ -96,7 +142,7 @@ def visitantes_merge(
     """The concrete visitantes upsert (email-keyed), all rules applied.
 
     ``process_date`` (ISO yyyy-mm-dd) pins "current" year/month for
-    deterministic tests; defaults to the batch's max fechaUltimaVisita.
+    deterministic tests; defaults to the current date.
 
     ``null_safe=False`` joins on plain equality instead of ``eqNullSafe``:
     required by the bucketed-warehouse path, because null-safe equality
@@ -106,52 +152,14 @@ def visitantes_merge(
     both sides (the VISITANTES_SCHEMA declares email non-nullable; the
     batch aggregate groups by it).
     """
-    if process_date is not None:
-        cur = F.lit(process_date).cast("date")
+    if process_date is None:
+        merged = _MERGED_TODAY_SQL
     else:
-        cur = F.current_date()
-    cur_y, cur_m = F.year(cur), F.month(cur)
-
-    t = target.select([F.col(c).alias(f"t_{c}") for c in target.columns])
-    s = source.select([F.col(c).alias(f"s_{c}") for c in source.columns])
-    cond = (
-        F.col("t_email").eqNullSafe(F.col("s_email"))
-        if null_safe
-        else F.col("t_email") == F.col("s_email")
-    )
-    joined = t.join(s, cond, "full_outer")
-
-    t_last = F.col("t_fechaUltimaVisita")
-    matched = F.col("t_email").isNotNull() & F.col("s_email").isNotNull()
-    same_year = F.year(t_last) == cur_y
-    same_ym = same_year & (F.month(t_last) == cur_m)
-
-    return joined.select(
-        F.coalesce("t_email", "s_email").alias("email"),
-        # D22: first visit never changes once set.
-        F.coalesce("t_fechaPrimeraVisita", "s_fechaPrimeraVisita").alias("fechaPrimeraVisita"),
-        F.greatest(
-            F.coalesce("t_fechaUltimaVisita", "s_fechaUltimaVisita"),
-            F.coalesce("s_fechaUltimaVisita", "t_fechaUltimaVisita"),
-        ).alias("fechaUltimaVisita"),
-        (F.coalesce("t_visitasTotales", F.lit(0)) + F.coalesce("s_visitasTotales", F.lit(0)))
-        .cast("long")
-        .alias("visitasTotales"),
-        F.when(
-            matched & same_year,
-            F.coalesce("t_visitasAnioActual", F.lit(0)) + F.coalesce("s_visitasAnioActual", F.lit(0)),
-        )
-        .otherwise(F.coalesce("s_visitasAnioActual", "t_visitasAnioActual", F.lit(0)))
-        .cast("long")
-        .alias("visitasAnioActual"),
-        F.when(
-            matched & same_ym,
-            F.coalesce("t_visitasMesActual", F.lit(0)) + F.coalesce("s_visitasMesActual", F.lit(0)),
-        )
-        .otherwise(F.coalesce("s_visitasMesActual", "t_visitasMesActual", F.lit(0)))
-        .cast("long")
-        .alias("visitasMesActual"),
-    )
+        merged = _merged_sql(f"DATE'{date.fromisoformat(process_date).isoformat()}'")
+    t = target.selectExpr(*_TARGET_SQL)
+    s = source.selectExpr(*_SOURCE_SQL)
+    cond = F.expr("t_email <=> s_email" if null_safe else "t_email = s_email")
+    return t.join(s, cond, "full_outer").selectExpr(*merged)
 
 
 def scd2_apply(

@@ -74,37 +74,34 @@ def _process_micro_batch(warehouse: Warehouse, process_date: str | None):
                 bad_files.append(p.rsplit("/", 1)[-1])
         # every bitacora row of the batch goes out as ONE append at the end
         markers = [(f, 0, 0, S.STATUS_LAYOUT_FAIL) for f in sorted(bad_files) if f not in marked]
+        names = sorted({p.rsplit("/", 1)[-1] for p in paths} - set(bad_files))
+        if not names:
+            warehouse.log_bitacora(markers)
+            return
         batch_df = batch_df.drop("__path")
         if bad_files:
             batch_df = batch_df.filter(~F.col("nombreArchivo").isin(bad_files))
-            if batch_df.isEmpty():
-                warehouse.log_bitacora(markers)
-                return
         flagged = T.with_validity_flags(batch_df)
         ok, bad = T.split_valid_invalid(flagged)
-        errores = T.expand_errors(bad, F.col("nombreArchivo")).cache()
-        stats = T.normalize_and_cast(ok).cache()
+        errores = T.expand_errors(bad, "nombreArchivo")
+        stats = T.normalize_and_cast(ok)
 
-        warehouse.append_partitioned(stats, "estadisticas")
-        warehouse.append_partitioned(errores, "errores")
+        # per-file bitacora counts come back from the appends themselves
+        ok_counts = warehouse.append_rows(stats, "estadisticas", names)
+        err_counts = warehouse.append_rows(errores, "errores", names)
 
         if not merge_done:
             visitors = T.visitors_aggregate(stats)
             # incremental: touches only the hash buckets of this batch's emails
             warehouse.merge_visitantes(visitors, process_date=process_date, applied_key=batch_key)
 
-        # per-file bitacora rows from ONE aggregate (no per-file count() loop)
-        ok_counts = {r[0]: r[1] for r in stats.groupBy("nombreArchivo").count().collect()}
-        err_counts = {r[0]: r[1] for r in errores.groupBy("nombreArchivo").count().collect()}
-        for fname in sorted(set(ok_counts) | set(err_counts)):
+        for fname in names:
             if fname in marked:
                 continue  # replay: completion marker already written
-            e = int(err_counts.get(fname, 0))
+            e = err_counts[fname]
             status = S.STATUS_OK_WITH_ERRORS if e > 0 else S.STATUS_OK
-            markers.append((fname, int(ok_counts.get(fname, 0)), e, status))
+            markers.append((fname, ok_counts[fname], e, status))
         warehouse.log_bitacora(markers)
-        stats.unpersist()
-        errores.unpersist()
 
     return inner
 

@@ -1,12 +1,13 @@
 """ETL-semantics golden tests (SURVEY §5.2) over FIXTURES.md variants."""
 
+import datetime
 import os
 
 import pyspark.sql.functions as F
 import pytest
 
 from pipeline_etl_website_visits_spark.etl import schema as S
-from pipeline_etl_website_visits_spark.etl.load import Warehouse
+from pipeline_etl_website_visits_spark.etl.load import VISITANTES_SCHEMA, Warehouse
 from pipeline_etl_website_visits_spark.etl.pipeline import (
     list_report_files,
     process_directory,
@@ -323,10 +324,13 @@ def test_append_rows_counts_what_the_write_added(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     key = "report_a b:1.txt"  # escaped in the partition dir name
     rows = spark.range(7).select(F.col("id"), F.lit(key).alias("nombreArchivo"))
-    assert wh.append_rows(rows.repartition(3), "t", key) == 7
-    assert wh.append_rows(rows.limit(4), "t", key) == 4  # overwrite: the new files only
-    assert wh.append_rows(rows.limit(0), "t", key) == 0  # no rows: old partition stays
+    assert wh.append_rows(rows.repartition(3), "t", [key]) == {key: 7}
+    assert wh.append_rows(rows.limit(4), "t", [key]) == {key: 4}  # overwrite: the new files only
+    assert wh.append_rows(rows.limit(0), "t", [key]) == {key: 0}  # no rows: old partition stays
     assert wh.read("t").count() == 4
+    # several partitions in one write, each counted on its own
+    two = spark.range(5).selectExpr("id", "IF(id < 2, 'a.txt', 'b.txt') AS nombreArchivo")
+    assert wh.append_rows(two, "t", ["a.txt", "b.txt", "c.txt"]) == {"a.txt": 2, "b.txt": 3, "c.txt": 0}
 
 
 def test_reordered_header_maps_by_name(spark, report_dir, tmp_path):
@@ -374,3 +378,206 @@ def test_duplicated_header_column_status(spark, report_dir, tmp_path):
     assert by_name["report_dupdecl.txt"].status == S.STATUS_SYSTEM_FAIL
     assert by_name["report_dupextra.txt"].status == S.STATUS_OK
     assert by_name["report_dupextra.txt"].ok_count == 5
+
+
+@pytest.fixture()
+def py4j_calls(spark, monkeypatch):
+    """``py4j_calls()`` is the number of commands this thread has sent to
+    the JVM so far. py4j's finalizer thread, which releases garbage-collected
+    Java references at its own pace, is not counted."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent = [0]
+    caller = threading.get_ident()
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == caller:
+            sent[0] += 1
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return lambda: sent[0]
+
+
+def test_per_file_plans_build_in_few_jvm_calls(spark, report_dir, tmp_path, py4j_calls):
+    """Tripwire on driver-side construction: each step is SQL text the JVM
+    parses in one call, not a chain of Column calls at a dozen py4j round
+    trips each. Bounds are a quarter of what the Column chains needed
+    (transform_file 2,108, visitantes_merge 873), and 1,200 for a whole
+    steady-state process_file (about 4,360 with the Column chains)."""
+    from pipeline_etl_website_visits_spark.operators.merge import visitantes_merge
+
+    FX.make_allvalid(report_dir)
+    mixed = FX.make_mixed(report_dir)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    process_file(spark, wh, os.path.join(report_dir, "report_allvalid.txt"), process_date="2026-03-28")
+    raw = read_report(spark, mixed)
+    target = wh.read_visitantes()
+
+    def calls(build):
+        n0 = py4j_calls()
+        out = build()
+        return py4j_calls() - n0, out
+
+    n_transform, (_, visitors, _) = calls(lambda: transform_file(raw, "report_mixed.txt"))
+    n_merge, _ = calls(lambda: visitantes_merge(target, visitors, "2026-03-28"))
+    n_file, res = calls(lambda: process_file(spark, wh, mixed, process_date="2026-03-28"))
+    assert res.status == S.STATUS_OK_WITH_ERRORS
+    assert n_transform <= 2108 // 4
+    assert n_merge <= 873 // 4
+    assert n_file <= 1200
+
+
+def test_repeat_process_file_compiles_no_code(spark, report_dir, tmp_path):
+    """Every per-file plan is the same code from one file to the next: the
+    control rows carry their timestamps inside a folded literal, which
+    generated code holds by reference instead of inlining it."""
+    path = FX.make_mixed(report_dir)
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    process_file(spark, Warehouse(spark, str(tmp_path / "wh1")), path, process_date="2026-03-28")
+    before = compiled.getCount()
+    res = process_file(spark, Warehouse(spark, str(tmp_path / "wh2")), path, process_date="2026-03-28")
+    assert res.status == S.STATUS_OK_WITH_ERRORS
+    assert compiled.getCount() - before == 0
+
+
+def test_manifest_read_is_one_jvm_call(spark, tmp_path, py4j_calls):
+    """The _applied manifest grows a line per committed file; reading it
+    costs the same round trips at any length."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    short, long_ = str(tmp_path / "one"), str(tmp_path / "many")
+    wh._write_small_text(short, "a.txt\n")
+    wh._write_small_text(long_, "".join(f"report_{i}.txt\n" for i in range(1000)))
+
+    def calls(p):
+        n0 = py4j_calls()
+        lines = wh._read_small_text(p)
+        return py4j_calls() - n0, len(lines)
+
+    calls(short)  # looks the JVM classes up
+    n_short, n_lines_short = calls(short)
+    n_long, n_lines_long = calls(long_)
+    assert (n_lines_short, n_lines_long) == (1, 1000)
+    assert n_long == n_short
+
+
+def test_control_row_schemas(spark, tmp_path, monkeypatch):
+    """The logs and bitacora rows are written with the declared types and
+    nullability, stamps included."""
+    from pyspark.sql import DataFrameWriter
+
+    written = {}
+    real_parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        written[os.path.basename(path)] = self._df.schema
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.log_file_events([("f.txt", "RECIBIDO", "INFO", None)])
+    wh.log_bitacora([("f.txt", 3, 1, S.STATUS_OK_WITH_ERRORS)])
+
+    def shape(schema):
+        return [(f.name, f.dataType.simpleString(), f.nullable) for f in schema.fields]
+
+    assert shape(written["logs"]) == [
+        ("nombreArchivo", "string", False),
+        ("etapa", "string", False),
+        ("nivel", "string", False),
+        ("mensaje", "string", True),
+        ("seq", "bigint", False),
+        ("fechaProceso", "timestamp", False),
+        ("fecha", "string", False),
+    ]
+    assert shape(written["bitacora"]) == [
+        ("nombreArchivo", "string", False),
+        ("registrosExitosos", "bigint", True),
+        ("registrosFallidos", "bigint", True),
+        ("estatus", "string", False),
+        ("fechaProceso", "timestamp", False),
+    ]
+    assert shape(wh.read_visitantes().schema) == [
+        (f.name, f.dataType.simpleString(), f.nullable) for f in VISITANTES_SCHEMA.fields
+    ]
+    assert wh.file_log("f.txt").first()["mensaje"] is None
+
+
+ADVERSARIAL_FILE = "report_d'arc.txt"
+
+
+def _write_adversarial_report(dirpath: str) -> str:
+    """Cells with quotes, backslashes, % and _, blanks around values,
+    placeholders ("-", "0", "") and non-ASCII text, in a file whose name
+    carries a quote."""
+
+    def row(**cells):
+        r = FX.valid_row(1)
+        for k, v in cells.items():
+            r[FX.HEADER.index(k.replace("_", " "))] = v
+        return r
+
+    rows = [
+        row(email="o.brien%1@example.com", jyv="O'Brien", Badmail="back\\slash", Baja="100%",
+            Fecha_envio=" 05/03/2026 14:30 ", Opens=" 7 ", Fecha_click="06/03/2026 09:15",
+            Clicks="0", Links="http://x.com/a?b='c'&d=\\d", IPs="  1.2.3.4  ",
+            Navegadores="-", Plataformas="0"),
+        row(email="  ana@example.com  ", jyv="ñandú café", Badmail="日本語", Baja="  ",
+            Opens="12", Links="%_\\%", IPs="'", Navegadores="\\", Plataformas="\\'"),
+        row(email="o.brien%1@example.com", Fecha_envio="01/03/2026 08:00", Baja="-"),
+        row(email="o'brien@example.com"),
+        row(email="a\\b@example.com", Fecha_envio="-", Fecha_open="0"),
+        row(email="", Fecha_click="\\d\\d/03/2026 10:00"),
+        row(email="ñ@example.com", Fecha_open=" - "),
+        row(email="UPPER@Example.COM", jyv="", Badmail="0 ", Baja=" -"),
+    ]
+    return FX.write_csv(os.path.join(dirpath, ADVERSARIAL_FILE), FX.HEADER, rows)
+
+
+# what the ETL wrote for this file when its steps were built Column by Column
+_ADVERSARIAL_ESTADISTICAS = [
+    ('UPPER@Example.COM', None, None, None, datetime.datetime(2026, 3, 2, 14, 1), datetime.datetime(2026, 3, 2, 15, 1), 1, 1, None, 1, 1, 'http://example.com/a', '1.2.3.4; 5.6.7.8', 'Chrome', 'Windows', "report_d'arc.txt"),
+    ('ana@example.com', 'ñandú café', '日本語', None, datetime.datetime(2026, 3, 2, 14, 1), datetime.datetime(2026, 3, 2, 15, 1), 12, 1, None, 1, 1, '%_\\%', "'", '\\', "\\'", "report_d'arc.txt"),
+    ('o.brien%1@example.com', "O'Brien", 'back\\slash', '100%', datetime.datetime(2026, 3, 5, 14, 30), datetime.datetime(2026, 3, 2, 15, 1), 7, 1, datetime.datetime(2026, 3, 6, 9, 15), 0, 1, "http://x.com/a?b='c'&d=\\d", '1.2.3.4', None, None, "report_d'arc.txt"),
+    ('o.brien%1@example.com', 'j', None, None, datetime.datetime(2026, 3, 1, 8, 0), datetime.datetime(2026, 3, 2, 15, 1), 1, 1, None, 1, 1, 'http://example.com/a', '1.2.3.4; 5.6.7.8', 'Chrome', 'Windows', "report_d'arc.txt"),
+]
+_ADVERSARIAL_ERRORES = [
+    ("o'brien@example.com", 'Email', "report_d'arc.txt"),
+    ('a\\b@example.com', 'Email', "report_d'arc.txt"),
+    ('a\\b@example.com', 'Fecha envio', "report_d'arc.txt"),
+    ('a\\b@example.com', 'Fecha open', "report_d'arc.txt"),
+    ('ñ@example.com', 'Email', "report_d'arc.txt"),
+    ('ñ@example.com', 'Fecha open', "report_d'arc.txt"),
+    (None, 'Email', "report_d'arc.txt"),
+    (None, 'Fecha click', "report_d'arc.txt"),
+]
+_ADVERSARIAL_VISITANTES = [
+    ('UPPER@Example.COM', datetime.date(2026, 3, 2), datetime.date(2026, 3, 2), 1, 1, 1),
+    ('ana@example.com', datetime.date(2026, 3, 2), datetime.date(2026, 3, 2), 1, 1, 1),
+    ('o.brien%1@example.com', datetime.date(2026, 3, 1), datetime.date(2026, 3, 5), 2, 2, 2),
+]
+_ADVERSARIAL_BITACORA = [
+    ("report_d'arc.txt", 4, 8, 'Completado con errores'),
+]
+
+
+def test_adversarial_cells_golden(spark, report_dir, tmp_path):
+    """Every value reaches the SQL text through one escaping helper, so
+    quotes, backslashes and regex-looking cells come out as they went in."""
+    _write_adversarial_report(report_dir)
+    wh_root = str(tmp_path / "wh")
+    results = process_directory(spark, report_dir, wh_root, process_date="2026-03-28")
+    assert [(r.filename, r.status, r.ok_count, r.err_count) for r in results] == [
+        (ADVERSARIAL_FILE, S.STATUS_OK_WITH_ERRORS, 4, 8)
+    ]
+    wh = Warehouse(spark, wh_root)
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    assert rows(wh.read("estadisticas")) == _ADVERSARIAL_ESTADISTICAS
+    assert rows(wh.read("errores")) == _ADVERSARIAL_ERRORES
+    assert rows(wh.read_visitantes()) == _ADVERSARIAL_VISITANTES
+    assert sorted(tuple(r)[:4] for r in wh.read("bitacora").collect()) == _ADVERSARIAL_BITACORA

@@ -1549,3 +1549,41 @@ def test_stream_flat_vector_ingest_equals_full_rebuild(spark, tmp_path):
     )
     q2.awaitTermination(120)
     assert sum(r["n_vectors"] for r in ivfflat_cell_stats(spark, p_inc).collect()) == n
+
+
+def test_visits_stream_batch_caches_nothing(spark, tmp_path, monkeypatch):
+    """A micro-batch's bitacora counts come back from its two appends: the
+    batch body caches nothing and runs no per-file count of its own."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    cached = []
+    for attr in ("cache", "persist"):
+        real = getattr(DataFrame, attr)
+
+        def record(self, *args, _real=real, _attr=attr, **kwargs):
+            cached.append(_attr)
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrame, attr, record)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    FX.make_allvalid(str(in_dir))
+    FX.make_mixed(str(in_dir))
+    FX.make_badlayout(str(in_dir))
+    wh_root = str(tmp_path / "wh")
+    q = start_visits_stream(
+        spark, str(in_dir), wh_root, str(tmp_path / "ckpt"), process_date="2026-03-28",
+        max_files_per_trigger=3,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert cached == []
+    bit = {
+        r["nombreArchivo"]: (r["registrosExitosos"], r["registrosFallidos"], r["estatus"])
+        for r in Warehouse(spark, wh_root).read("bitacora").collect()
+    }
+    assert bit == {
+        "report_allvalid.txt": (100, 0, "Completado"),
+        "report_mixed.txt": (70, 50, "Completado con errores"),
+        "report_badlayout.txt": (0, 0, "FALLO_LAYOUT"),
+    }
