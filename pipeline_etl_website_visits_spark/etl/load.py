@@ -55,6 +55,7 @@ import functools
 import os
 import re
 from types import SimpleNamespace
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -162,13 +163,28 @@ def _bucket_sql(n_buckets: int) -> str:
     return f"pmod(hash(coalesce(email, '')), {int(n_buckets)})"
 
 
+class _Snapshot(NamedTuple):
+    """The visitantes pointer and the current version's bucket manifest."""
+
+    versions: list[str]  # retained versions, current first
+    n_buckets: int
+    refs: dict[int, str]  # bucket -> version dir holding it
+
+    @property
+    def current(self) -> str | None:
+        return self.versions[0] if self.versions else None
+
+
 class Warehouse:
     """Parquet-backed warehouse with the four ETL tables.
 
-    ``n_buckets`` controls the hash-bucket layout of the visitantes snapshot
-    (``pmod(hash(email), n_buckets)``); an existing snapshot's bucket count
-    always wins over the constructor value, so readers/mergers of a table
-    created with a different N stay consistent. Sized so one bucket is a few
+    The visitantes snapshot has one layout: versioned dirs of hash-bucket
+    partitions (``bucket=<pmod(hash(email), n_buckets)>``), each version
+    with a ``_buckets`` manifest naming the dir that holds every bucket,
+    and a pointer file listing the retained versions. ``n_buckets`` sets
+    the bucket count of a new snapshot; an existing snapshot's count always
+    wins over the constructor value, so readers/mergers of a table created
+    with a different N stay consistent. Sized so one bucket is a few
     hundred MB at the target scale (100 TB / 4096 buckets ≈ 25 GB — at that
     scale use thousands; the test default keeps directories readable).
     """
@@ -178,27 +194,9 @@ class Warehouse:
         spark: SparkSession,
         root: str,
         n_buckets: int = 16,
-        bucketed: bool = False,
         retention: int = 2,
     ):
-        """``bucketed=True`` opts the visitantes snapshot into Spark's
-        catalog-level bucketing, laid out as ``partitionBy(bucket) +
-        bucketBy(n_buckets, email) + sortBy(email)`` where the ``bucket``
-        partition column is the same murmur3 hash the bucket spec uses.
-        That one layout delivers BOTH scale properties at once (VERDICT r4
-        item 3): the merge's full-outer join needs NO exchange and NO sort
-        on the (big) target side — SURVEY §4.3's shuffle-free re-run story
-        — AND each merge reads and rewrites ONLY the buckets the batch
-        touches (the bucket partition dirs are individually addressable;
-        untouched buckets carry into the new version as partition-location
-        references). That matches the reference MERGE's cost model
-        (touched rows, no re-shuffle; utils/utils_load.py:43-84). The
-        default hash-partition-dir layout keeps the same touched-bucket
-        write pruning without a catalog dependency, at the price of
-        shuffling both merge-join sides. Both modes share pointer/crash-
-        safety and migrate into each other on the next merge.
-
-        ``retention`` is the snapshot-retention contract (VERDICT r9
+        """``retention`` is the snapshot-retention contract (VERDICT r9
         item 7 — the VACUUM knob): how many snapshot VERSIONS each GC
         sweep keeps readable — the current one plus ``retention - 1``
         time-travel predecessors (:meth:`visitantes_versions` /
@@ -215,7 +213,6 @@ class Warehouse:
         self.spark = spark
         self.root = root
         self.n_buckets = int(n_buckets)
-        self.bucketed = bool(bucketed)
         self.retention = int(retention)
 
     def path(self, table: str) -> str:
@@ -327,8 +324,8 @@ class Warehouse:
     # -- stored gram index (incremental-dedup counterpart of the vector
     #    index: shingle the corpus once, score every batch against it) ---
     def _root_tag(self) -> str:
-        """Short warehouse-root hash for catalog-name namespacing (shared
-        by the bucketed-snapshot tables and the gram-index tables)."""
+        """Short warehouse-root hash that namespaces the gram-index catalog
+        table names."""
         import hashlib
 
         return hashlib.md5(self.root.encode("utf-8")).hexdigest()[:8]
@@ -339,7 +336,7 @@ class Warehouse:
     ) -> str:
         """Persist the corpus inverted gram index under the warehouse root
         as a gram-bucketed catalog table; returns the table name (pass it
-        to :meth:`dedup_against_gram_index` / ``append_to_gram_index``)."""
+        to :meth:`dedup_against_gram_index` / ``dedup.append_to_gram_index``)."""
         from pipeline_etl_website_visits_spark.operators.dedup import save_gram_index
 
         table = f"gramidx_{self._root_tag()}_{name}"
@@ -347,50 +344,6 @@ class Warehouse:
             corpus, table, self.path(f"gramidx_{name}"), text_col, id_col, **kw
         )
         return table
-
-    def append_gram_index(
-        self, new_docs: DataFrame, table: str, text_col: str = "text",
-        id_col: str = "doc_id", **kw,
-    ) -> bool:
-        """Fold an ingested batch into the stored gram index (geometry-
-        validated, applied_key-redo-safe; see operators/dedup.py)."""
-        from pipeline_etl_website_visits_spark.operators.dedup import (
-            append_to_gram_index,
-        )
-
-        return append_to_gram_index(new_docs, table, text_col, id_col, **kw)
-
-    def compact_gram_index(self, table: str, **kw) -> str:
-        """Rewrite an append-heavy gram index to one file per bucket
-        (versioned-dir swap, ledger carried over — see
-        operators/dedup.py:compact_gram_index); returns the new location.
-        The small-file counterpart of :meth:`compact` for the index."""
-        from pipeline_etl_website_visits_spark.operators.dedup import (
-            compact_gram_index,
-        )
-
-        return compact_gram_index(self.spark, table, **kw)
-
-    def gc_gram_index(self, table: str) -> list[str]:
-        """Sweep gram-index generations the catalog no longer references
-        (operators/dedup.py:gc_gram_generations — compactor-lease
-        serialized). The RETENTION DELAY is the caller's: run only after
-        no session registered against an old generation can still be
-        scanning it. Returns the removed dirs."""
-        from pipeline_etl_website_visits_spark.operators.dedup import (
-            gc_gram_generations,
-        )
-
-        return gc_gram_generations(self.spark, table)
-
-    def gc_vector_index(self, name: str = "embeddings") -> list[str]:
-        """Sweep vector-index code generations the pointer no longer
-        references (operators/vector_index.py:gc_ivfpq_generations)."""
-        from pipeline_etl_website_visits_spark.operators.vector_index import (
-            gc_ivfpq_generations,
-        )
-
-        return gc_ivfpq_generations(self.path(f"vindex_{name}"))
 
     def dedup_against_gram_index(
         self, incoming: DataFrame, table: str, text_col: str = "text",
@@ -707,35 +660,27 @@ class Warehouse:
     # The pointer flip still publishes data + both manifests atomically.
     _POINTER = "visitantes_CURRENT"
 
+    def _visitantes_pointer(self) -> list[str]:
+        """Retained snapshot versions, current first ([] before the first
+        publish)."""
+        return self._read_pointer_text(self.path(self._POINTER)) or []
+
     def _current_visitantes_version(self) -> str | None:
-        lines = self._read_pointer_text(self.path(self._POINTER))
-        return lines[0] if lines else None
-
-    @staticmethod
-    def _version_dir(version: str) -> str:
-        """Data dir name of a version: plain ``visitantes_vN``, or the dir
-        component of a bucketed ``tbl:<catalog_table>:<dir>`` pointer."""
-        return version.rsplit(":", 1)[1] if version.startswith("tbl:") else version
-
-    def _bucketed_table_name(self, n: int) -> str:
-        """Catalog name for a bucketed snapshot version — the warehouse root
-        is folded in so concurrent warehouses in one session never collide."""
-        return f"visitantes_b{self._root_tag()}_v{n}"
+        versions = self._visitantes_pointer()
+        return versions[0] if versions else None
 
     def _bucket_col(self, n_buckets: int):
         return F.expr(_bucket_sql(n_buckets))
 
-    def _visitantes_manifest(self, version: str) -> tuple[int, dict[int, str]] | None:
-        """(n_buckets, {bucket -> version dir holding it}) or None (legacy
-        single-dir snapshot, or a catalog-bucketed snapshot written before
-        the partitioned-bucketed layout). Works for both plain
-        ``visitantes_vN`` versions and ``tbl:`` pointers (manifest lives in
-        the version's data dir either way)."""
-        lines = self._read_small_text(
-            os.path.join(self.path(self._version_dir(version)), "_buckets")
-        )
+    def _visitantes_manifest(self, version: str) -> tuple[int, dict[int, str]]:
+        """(n_buckets, {bucket -> version dir holding it}) of ``version``.
+        Every publish writes ``_buckets`` before it flips the pointer, so a
+        pointer-listed version without one is damage: fail loudly instead
+        of rebuilding the snapshot from whatever the directory holds."""
+        p = os.path.join(self.path(version), "_buckets")
+        lines = self._read_small_text(p)
         if lines is None:
-            return None
+            raise FileNotFoundError(f"visitantes version {version!r} has no bucket manifest {p}")
         n_buckets = self.n_buckets
         refs: dict[int, str] = {}
         for line in lines:
@@ -746,10 +691,25 @@ class Warehouse:
                 refs[int(b)] = ver
         return n_buckets, refs
 
-    def _bucket_paths(self, refs: dict[int, str]) -> list[str]:
-        return [
-            os.path.join(self.path(ver), f"bucket={b}") for b, ver in sorted(refs.items())
-        ]
+    def _visitantes_state(self) -> _Snapshot:
+        """The pointer and the current version's manifest, read once per
+        write (under the writer lease)."""
+        versions = self._visitantes_pointer()
+        if not versions:
+            return _Snapshot([], self.n_buckets, {})
+        return _Snapshot(versions, *self._visitantes_manifest(versions[0]))
+
+    def _read_refs(self, refs: dict[int, str], buckets: set[int] | None = None) -> DataFrame:
+        """The rows of the bucket dirs ``refs`` names, or of those among
+        ``buckets`` only. Leaf dirs from (possibly) different version roots
+        are read as plain directories — bucket is derivable from email, not
+        a data column."""
+        if buckets is not None:
+            refs = {b: v for b, v in refs.items() if b in buckets}
+        if not refs:
+            return _jvm_rows(self.spark, VISITANTES_SCHEMA, [])
+        paths = [os.path.join(self.path(ver), f"bucket={b}") for b, ver in sorted(refs.items())]
+        return self.spark.read.schema(VISITANTES_SCHEMA).parquet(*paths)
 
     def forget(self, email: str) -> dict:
         """GDPR erasure (right to be forgotten): remove every row for
@@ -780,41 +740,20 @@ class Warehouse:
         return out
 
     def _forget_visitantes_locked(self, email: str) -> dict:
-        out: dict[str, str] = {}
-        version = self._current_visitantes_version()
-        if version is not None:
-            manifest = self._visitantes_manifest(version)
-            if manifest is None:
-                # legacy flat or legacy bucketBy-only snapshot: full rewrite
-                # null-safe inequality: NULL-email rows are untouched, not
-                # silently erased (email <> 'x' is NULL on a NULL email).
-                snap = self.read_visitantes().filter(~F.col("email").eqNullSafe(email))
-                self._write_visitantes_locked(snap, applied_key=f"forget:{email}")
-                out["visitantes"] = "full-rewrite"
-            else:
-                n_buckets, refs = manifest
-                b = (
-                    _jvm_rows(self.spark, StructType([VISITANTES_SCHEMA["email"]]), [(email,)])
-                    .selectExpr(f"{_bucket_sql(n_buckets)} AS b")
-                    .collect()[0]["b"]
-                )
-                subset = self.read_visitantes(buckets={b}).filter(
-                    ~F.col("email").eqNullSafe(email)
-                )
-                carried = {bb: v for bb, v in refs.items() if bb != b}
-                # route by the snapshot's own layout (tbl: = partitioned-
-                # bucketed catalog table), not the constructor flag — a
-                # Warehouse opened in either mode must erase correctly
-                if version.startswith("tbl:"):
-                    self._publish_visitantes_bucketed(
-                        subset, applied_key=f"forget:{email}", touched_refs=carried
-                    )
-                else:
-                    self._publish_visitantes(
-                        subset, touched_refs=carried, applied_key=f"forget:{email}"
-                    )
-                out["visitantes"] = f"bucket={b}"
-        return out
+        snap = self._visitantes_state()
+        if snap.current is None:
+            return {}
+        b = (
+            _jvm_rows(self.spark, StructType([VISITANTES_SCHEMA["email"]]), [(email,)])
+            .selectExpr(f"{_bucket_sql(snap.n_buckets)} AS b")
+            .collect()[0]["b"]
+        )
+        # null-safe inequality: NULL-email rows are untouched, not silently
+        # erased (email <> 'x' is NULL on a NULL email)
+        subset = self._read_refs(snap.refs, {b}).filter(~F.col("email").eqNullSafe(email))
+        carried = {bb: v for bb, v in snap.refs.items() if bb != b}
+        self._publish_visitantes(subset, snap, carried, applied_key=f"forget:{email}")
+        return {"visitantes": f"bucket={b}"}
 
     def visitantes_versions(self) -> list[str]:
         """Snapshot versions still readable, oldest→current. Each publish
@@ -823,13 +762,7 @@ class Warehouse:
         reference), so this is a bounded ``retention``-deep time-travel
         window — the same contract as a VACUUM'd lakehouse table, with
         the constructor's ``retention`` as the knob."""
-        version = self._current_visitantes_version()
-        if version is None:
-            return []
-        lines = self._read_pointer_text(self.path(self._POINTER)) or []
-        # pointer file: current on line 1, predecessors on later lines
-        # (already trimmed to the publishing warehouse's retention)
-        return list(reversed([v for v in lines if v]))
+        return list(reversed(self._visitantes_pointer()))
 
     def read_visitantes(
         self, buckets: set[int] | None = None, version: str | None = None
@@ -837,54 +770,30 @@ class Warehouse:
         """The current snapshot — or, with ``version`` (from
         :meth:`visitantes_versions`), a time-travel read of a retained
         earlier snapshot. ``buckets`` prunes the read to those bucket dirs
-        only (the merge path reads just the buckets a batch touches)."""
-        if version is not None and version not in self.visitantes_versions():
+        only."""
+        versions = self._visitantes_pointer()
+        if version is None:
+            version = versions[0] if versions else None
+        elif version not in versions:
             raise ValueError(
                 f"visitantes version {version!r} is not retained; "
-                f"available: {self.visitantes_versions()}"
+                f"available: {list(reversed(versions))}"
             )
         if version is None:
-            version = self._current_visitantes_version()
-        if version is None:
             return _jvm_rows(self.spark, VISITANTES_SCHEMA, [])
-        if version.startswith("tbl:"):
-            # bucketed snapshot: the catalog scan carries the bucket spec the
-            # merge join's exchange elimination depends on. The partitioned-
-            # bucketed layout (partitionBy(bucket) + bucketBy(email)) also
-            # supports pruned reads: the bucket partition column filters at
-            # the CatalogFileIndex, and the scan STAYS bucketed (verified by
-            # plan test), so a touched-bucket merge joins exchange-free over
-            # just the touched dirs. Legacy bucketBy-only snapshots have no
-            # bucket column and fall back to the full scan.
-            t = self.spark.table(version.split(":")[1])
-            if buckets is not None and "bucket" in t.columns:
-                t = t.filter(F.col("bucket").isin([int(b) for b in buckets]))
-            return t.drop("bucket") if "bucket" in t.columns else t
-        manifest = self._visitantes_manifest(version)
-        if manifest is None:  # legacy layout: one flat dir, no pruning
-            return self.spark.read.parquet(self.path(version))
-        _, refs = manifest
-        if buckets is not None:
-            refs = {b: v for b, v in refs.items() if b in buckets}
-        paths = self._bucket_paths(refs)
-        if not paths:
-            return _jvm_rows(self.spark, VISITANTES_SCHEMA, [])
-        # leaf dirs from (possibly) different version roots: read as plain
-        # directories — bucket is derivable from email, not a data column
-        return self.spark.read.schema(VISITANTES_SCHEMA).parquet(*paths)
+        return self._read_refs(self._visitantes_manifest(version)[1], buckets)
 
     def visitantes_applied(self) -> set[str]:
         """Batch keys (file names / stream batch ids) already merged into the
         CURRENT snapshot. The merge is additive, so redo-safety comes from
         checking this set: a crash after the merge's pointer flip but before
         the bitacora marker must NOT re-apply the batch on the retry."""
-        version = self._current_visitantes_version()
+        return self._applied_keys(self._current_visitantes_version())
+
+    def _applied_keys(self, version: str | None) -> set[str]:
         if version is None:
             return set()
-        lines = self._read_small_text(
-            os.path.join(self.path(self._version_dir(version)), "_applied")
-        )
-        return set(lines or [])
+        return set(self._read_small_text(os.path.join(self.path(version), "_applied")) or [])
 
     def visitantes_changes(self, include_same: bool = False) -> DataFrame:
         """Change data feed between the retained previous snapshot and the
@@ -964,196 +873,60 @@ class Warehouse:
     ) -> None:
         from pipeline_etl_website_visits_spark.operators.merge import visitantes_merge
 
-        version = self._current_visitantes_version()
-        manifest = self._visitantes_manifest(version) if version else None
-        # a mode switch needs a one-time FULL rewrite, incremental carry
-        # would be wrong-layout: bucketed mode cannot ADD-PARTITION plain
-        # hash-partitioned files into a catalog-bucketed table (the
-        # bucketed scan derives bucket ids from FILE NAMES and throws
-        # 'Invalid bucket file' on names without the bucket suffix), and
-        # legacy flat / legacy bucketBy-only snapshots have no manifest.
-        layout_matches = version is not None and (
-            version.startswith("tbl:") == self.bucketed
-        )
-        if version is not None and (manifest is None or not layout_matches):
-            merged = visitantes_merge(
-                self.read_visitantes(),
-                source,
-                process_date=process_date,
-                # null-safe equality only when the target carries no bucket
-                # spec the join could otherwise use
-                null_safe=not version.startswith("tbl:"),
-            )
-            self._write_visitantes_locked(merged, applied_key=applied_key)
-            return
-        n_buckets, refs = manifest if manifest else (self.n_buckets, {})
+        snap = self._visitantes_state()
         # touched buckets: bounded driver-side collect (≤ n_buckets values)
         touched = {
             int(r[0])
-            for r in source.selectExpr(f"{_bucket_sql(n_buckets)} AS b").distinct().collect()
+            for r in source.selectExpr(f"{_bucket_sql(snap.n_buckets)} AS b").distinct().collect()
         }
         if not touched:
             return
-        target_subset = self.read_visitantes(buckets=touched)
-        if self.bucketed:
-            # partitioned-bucketed mode gets BOTH round-4 wins at once
-            # (VERDICT r4 item 3): the pruned catalog scan stays Bucketed,
-            # so the full-outer merge join has NO target-side exchange
-            # (plain-equality keys to preserve the bucketBy(email) spec),
-            # AND only the touched buckets' dirs are rewritten — untouched
-            # buckets carry into the new version as partition-location
-            # references. The reference's MySQL MERGE (utils/utils_load.py:
-            # 43-84) was touched-rows with no re-shuffle; this is the
-            # distributed equivalent of that cost model.
-            merged = visitantes_merge(
-                target_subset, source, process_date=process_date, null_safe=False
-            )
-            self._publish_visitantes_bucketed(
-                merged, applied_key=applied_key, touched_refs=refs
-            )
-            return
-        merged = visitantes_merge(target_subset, source, process_date=process_date)
-        self._publish_visitantes(merged, touched_refs=refs, applied_key=applied_key)
+        target = self._read_refs(snap.refs, touched)
+        merged = visitantes_merge(target, source, process_date=process_date)
+        self._publish_visitantes(merged, snap, snap.refs, applied_key=applied_key)
 
     def write_visitantes(self, df: DataFrame, applied_key: str | None = None) -> None:
-        """Full snapshot (re)write — initial load / explicit rebucket. The
-        per-batch path is ``merge_visitantes`` (touched buckets only)."""
+        """Full snapshot (re)write — initial load. The per-batch path is
+        ``merge_visitantes`` (touched buckets only)."""
         with self._lease("visitantes-writer"):
-            self._write_visitantes_locked(df, applied_key=applied_key)
-
-    def _write_visitantes_locked(self, df: DataFrame, applied_key: str | None = None) -> None:
-        if self.bucketed:
-            self._publish_visitantes_bucketed(df, applied_key=applied_key)
-        else:
-            self._publish_visitantes(df, touched_refs={}, applied_key=applied_key)
-
-    def _publish_visitantes_bucketed(
-        self,
-        df: DataFrame,
-        applied_key: str | None,
-        touched_refs: dict[int, str] | None = None,
-    ) -> None:
-        """Publish a snapshot version as a PARTITIONED catalog-bucketed
-        external table (``partitionBy(bucket) + bucketBy(n_buckets, email)
-        + sortBy(email)``), under the same versioned-dir + atomic-pointer
-        protocol as the plain-partitioned layout. Pointer line:
-        ``tbl:<catalog_table>:<data_dir>``.
-
-        The ``bucket`` partition column is derived from the SAME
-        murmur3-hash the bucketBy spec uses, so each partition dir holds
-        exactly one bucket's emails — which makes single buckets
-        addressable: ``touched_refs`` entries whose bucket this write did
-        not materialize are attached to the new version's table via
-        ``ALTER TABLE ADD PARTITION ... LOCATION`` pointing INTO the prior
-        version's dirs (carry-by-reference, zero data movement), and the
-        ``_buckets`` manifest records the dir each bucket lives in for GC
-        retention. Write cost per publish is therefore ∝ touched buckets
-        while the catalog scan keeps the table-level bucket spec that
-        eliminates the merge join's target-side exchange."""
-        version_now = self._current_visitantes_version()
-        manifest_now = self._visitantes_manifest(version_now) if version_now else None
-        n_buckets = manifest_now[0] if manifest_now else self.n_buckets
-        applied = self.visitantes_applied()
-        if applied_key is not None:
-            applied = applied | {applied_key}
-        n = int(self._version_dir(version_now).rsplit("_v", 1)[1]) + 1 if version_now else 0
-        dirname = f"visitantes_v{n}"
-        table = self._bucketed_table_name(n)
-        self.spark.sql(f"DROP TABLE IF EXISTS {table}")
-        (
-            df.withColumn("bucket", self._bucket_col(n_buckets))
-            .write.format("parquet")
-            .partitionBy("bucket")
-            .bucketBy(n_buckets, "email")
-            .sortBy("email")
-            .option("path", self.path(dirname))
-            .mode("overwrite")
-            .saveAsTable(table)
-        )
-        fs, vdir, jvm = self._fs(self.path(dirname))
-        written = {
-            int(str(st.getPath().getName()).split("=", 1)[1])
-            for st in fs.listStatus(vdir)
-            if str(st.getPath().getName()).startswith("bucket=")
-        }
-        carry = {
-            b: ver for b, ver in (touched_refs or {}).items() if b not in written
-        }
-        if carry:
-            # ONE catalog statement for all carried buckets — a per-bucket
-            # loop would serialize n_buckets-1 metastore round trips per
-            # merge, defeating the touched-bucket cost model at scale
-            clauses = " ".join(
-                f"PARTITION (bucket={b}) "
-                f"LOCATION '{os.path.join(self.path(ver), f'bucket={b}')}'"
-                for b, ver in sorted(carry.items())
-            )
-            self.spark.sql(f"ALTER TABLE {table} ADD {clauses}")
-        refs = dict(carry)
-        refs.update({b: dirname for b in written})
-        manifest_lines = [f"n_buckets={n_buckets}"] + [
-            f"{b} {ver}" for b, ver in sorted(refs.items())
-        ]
-        self._write_small_text(
-            os.path.join(self.path(dirname), "_buckets"),
-            "\n".join(manifest_lines) + "\n",
-        )
-        self._write_small_text(
-            os.path.join(self.path(dirname), "_applied"),
-            ("\n".join(sorted(applied)) + "\n") if applied else "",
-        )
-        version = f"tbl:{table}:{dirname}"
-        # line 1: current; lines 2..retention: predecessors (retained by
-        # the GC) — the bounded time-travel window
-        # read_visitantes(version=...) serves
-        retained = self._publish_retained(version)
-        self._gc_visitantes(retained)
-        # drop superseded catalog entries (data dirs are GC'd above; external
-        # tables keep catalog metadata until dropped — best-effort cosmetic:
-        # a leftover entry after a retention change is metadata only)
-        if n >= self.retention:
-            self.spark.sql(
-                f"DROP TABLE IF EXISTS {self._bucketed_table_name(n - self.retention)}"
-            )
+            self._publish_visitantes(df, self._visitantes_state(), {}, applied_key=applied_key)
 
     def _publish_visitantes(
         self,
         df: DataFrame,
-        touched_refs: dict[int, str],
+        snap: _Snapshot,
+        carried: dict[int, str],
         applied_key: str | None,
     ) -> None:
-        """Write ``df`` into a new version's bucket dirs, carry ``touched_refs``
-        entries whose bucket is absent from ``df`` by reference, publish.
+        """Write ``df`` into the bucket dirs of the version after ``snap``,
+        carry ``carried`` entries whose bucket is absent from ``df`` by
+        reference, publish.
 
         Publish order (crash-safe): data dirs → ``_applied`` + ``_buckets``
-        manifests inside the version dir → atomic pointer rename. A crash at
+        manifests inside the version dir → atomic pointer rewrite. A crash at
         any earlier point leaves the previous version intact and current.
         """
-        version_now = self._current_visitantes_version()
-        manifest_now = self._visitantes_manifest(version_now) if version_now else None
-        n_buckets = manifest_now[0] if manifest_now else self.n_buckets
-
-        applied = self.visitantes_applied()
+        applied = self._applied_keys(snap.current)
         if applied_key is not None:
-            applied = applied | {applied_key}
-        n = int(version_now.rsplit("_v", 1)[1]) + 1 if version_now else 0
+            applied.add(applied_key)
+        n = int(snap.current.rsplit("_v", 1)[1]) + 1 if snap.current else 0
         version = f"visitantes_v{n}"
 
         # one task per bucket, so each bucket dir gets one file instead of
         # one per upstream partition
-        out = df.withColumn("bucket", self._bucket_col(n_buckets)).repartition("bucket")
+        out = df.withColumn("bucket", self._bucket_col(snap.n_buckets)).repartition("bucket")
         out.write.mode("overwrite").partitionBy("bucket").parquet(self.path(version))
         # which buckets did this write actually materialize?
-        fs, vdir, jvm = self._fs(self.path(version))
+        fs, vdir, _ = self._fs(self.path(version))
         written = {
             int(str(st.getPath().getName()).split("=", 1)[1])
             for st in fs.listStatus(vdir)
             if str(st.getPath().getName()).startswith("bucket=")
         }
-        refs = {b: ver for b, ver in touched_refs.items() if b not in written}
+        refs = {b: ver for b, ver in carried.items() if b not in written}
         refs.update({b: version for b in written})
 
-        manifest_lines = [f"n_buckets={n_buckets}"] + [
+        manifest_lines = [f"n_buckets={snap.n_buckets}"] + [
             f"{b} {ver}" for b, ver in sorted(refs.items())
         ]
         self._write_small_text(
@@ -1164,43 +937,25 @@ class Warehouse:
             ("\n".join(sorted(applied)) + "\n") if applied else "",
         )
         # repoint through the commit backend (atomic overwrite — no
-        # delete-to-rename gap; line 1: current, lines 2..retention:
-        # predecessors for the bounded time-travel window
-        # read_visitantes(version=...) serves)
-        retained = self._publish_retained(version)
-        self._gc_visitantes(retained)
-
-    def _publish_retained(self, version: str) -> list[str]:
-        """Prepend ``version`` to the pointer's retained-version list,
-        trimmed to the warehouse's ``retention`` window, and publish
-        atomically. Returns the retained list (newest first) for the GC
-        sweep. Reading the OLD pointer here (not just version_now) is
-        what lets retention > 2 carry the deeper history forward."""
-        prev_lines = self._read_pointer_text(self.path(self._POINTER)) or []
-        retained = [version] + [v for v in prev_lines if v != version][
-            : self.retention - 1
-        ]
+        # delete-to-rename gap). Line 1: current; then the predecessors
+        # read_visitantes(version=...) serves, trimmed to the retention
+        # window — carrying the old pointer's lines forward is what lets
+        # retention > 2 keep the deeper history.
+        retained = [version] + [v for v in snap.versions if v != version][: self.retention - 1]
         self._publish_pointer(self.path(self._POINTER), "\n".join(retained))
-        return retained
+        self._gc_visitantes(retained, {version: refs, snap.current: snap.refs})
 
-    def _gc_visitantes(self, retained: list[str]) -> None:
+    def _gc_visitantes(self, retained: list[str], known: dict) -> None:
         """Delete version dirs referenced by no RETAINED version's manifest
         (each retained version is kept with its full reference closure, so
         a time-travel read of any pointer-listed version always serves —
         the retention window expressed over reference sets instead of
-        consecutive numbering)."""
-        keep: set[str] = set()
+        consecutive numbering). ``known`` maps versions to the bucket refs
+        already read, so their manifests are not read again."""
+        keep = set(retained)
         for ver in retained:
-            if ver is None:
-                continue
-            keep.add(self._version_dir(ver))
-            # both layouts carry a _buckets manifest whose referenced dirs
-            # must survive (tbl: versions reference prior dirs through
-            # partition locations)
-            manifest = self._visitantes_manifest(ver)
-            if manifest is not None:
-                keep.update(manifest[1].values())
-        fs, root_path, jvm = self._fs(self.root)
+            keep.update((known[ver] if ver in known else self._visitantes_manifest(ver)[1]).values())
+        fs, root_path, _ = self._fs(self.root)
         if not fs.exists(root_path):
             return
         for st in fs.listStatus(root_path):

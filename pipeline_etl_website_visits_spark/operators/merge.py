@@ -137,20 +137,12 @@ def visitantes_merge(
     target: DataFrame,
     source: DataFrame,
     process_date: str | None = None,
-    null_safe: bool = True,
 ) -> DataFrame:
-    """The concrete visitantes upsert (email-keyed), all rules applied.
+    """The concrete visitantes upsert (email-keyed, null-safe join), all
+    rules applied.
 
     ``process_date`` (ISO yyyy-mm-dd) pins "current" year/month for
     deterministic tests; defaults to the current date.
-
-    ``null_safe=False`` joins on plain equality instead of ``eqNullSafe``:
-    required by the bucketed-warehouse path, because null-safe equality
-    rewrites the join keys to ``(coalesce(email,''), isnull(email))``, which
-    no longer matches the table's ``bucketBy(email)`` spec and silently
-    disables exchange elimination. Only safe when the key is non-null on
-    both sides (the VISITANTES_SCHEMA declares email non-nullable; the
-    batch aggregate groups by it).
     """
     if process_date is None:
         merged = _MERGED_TODAY_SQL
@@ -158,8 +150,7 @@ def visitantes_merge(
         merged = _merged_sql(f"DATE'{date.fromisoformat(process_date).isoformat()}'")
     t = target.selectExpr(*_TARGET_SQL)
     s = source.selectExpr(*_SOURCE_SQL)
-    cond = F.expr("t_email <=> s_email" if null_safe else "t_email = s_email")
-    return t.join(s, cond, "full_outer").selectExpr(*merged)
+    return t.join(s, F.expr("t_email <=> s_email"), "full_outer").selectExpr(*merged)
 
 
 def scd2_apply(

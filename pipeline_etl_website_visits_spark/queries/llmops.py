@@ -150,8 +150,8 @@ def gc_scratch_artifacts(
 ) -> list[str]:
     """Retention sweep over ALL stored scratch artifacts (pairovl /
     simgraph / bm25idx / ivfflat / gramidx / codebooks …) — the
-    gc_gram_index counterpart for the fingerprint-keyed scratch family
-    (VERDICT r12 item 6). :func:`_prune_stale_scratch` only fires when
+    ``dedup.gc_gram_generations`` counterpart for the fingerprint-keyed
+    scratch family (VERDICT r12 item 6). :func:`_prune_stale_scratch` only fires when
     the SAME (kind, corpus) rebuilds; artifacts of corpora that stop
     being queried — deleted sf dirs, retired kinds — otherwise
     accumulate forever.

@@ -77,9 +77,20 @@ def _fan_out(spark: SparkSession, sf_dir: str, name: str, df: DataFrame) -> Data
     capped at defaultParallelism, makes the fan-out identical at every
     core count. In production the knob only matters for inputs smaller
     than one scan split; real multi-split inputs never reach this path.
+    A directory table's size is the sum of its ``*.parquet`` part files
+    (the directory entry itself reads as a few KiB whatever it holds).
     """
+    path = table_path(sf_dir, name)
     try:
-        size = os.path.getsize(table_path(sf_dir, name))
+        if os.path.isdir(path):
+            size = sum(
+                os.path.getsize(os.path.join(d, f))
+                for d, _, files in os.walk(path)
+                for f in files
+                if f.endswith(".parquet")
+            )
+        else:
+            size = os.path.getsize(path)
     except OSError:
         return df
     raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))

@@ -191,24 +191,6 @@ def test_merge_writes_one_file_per_bucket(spark, tmp_path, target, source):
     assert wh.read_visitantes().count() == 205
 
 
-def test_legacy_flat_snapshot_upgrades_to_bucketed(spark, tmp_path, target, source):
-    """A snapshot written by the pre-bucketed layout (flat dir, no _buckets
-    manifest) must keep working: first merge does a one-time full rebucket."""
-    root = str(tmp_path / "wh")
-    wh = Warehouse(spark, root, n_buckets=16)
-    # simulate the legacy layout by hand: flat parquet dir + pointer
-    target.write.parquet(os.path.join(root, "visitantes_v0"))
-    wh._write_small_text(os.path.join(root, "visitantes_CURRENT"), "visitantes_v0")
-    assert wh._visitantes_manifest("visitantes_v0") is None
-
-    wh.merge_visitantes(source, process_date=PROCESS_DATE, applied_key="up")
-    v1 = wh._current_visitantes_version()
-    assert wh._visitantes_manifest(v1) is not None  # now bucketed
-    out = {r["email"]: r for r in wh.read_visitantes().collect()}
-    assert len(out) == 5
-    assert out["match-same-month@example.com"]["visitasTotales"] == 13
-
-
 def test_gc_keeps_referenced_versions(spark, tmp_path, target, source):
     """Version dirs still referenced by the current manifest must survive GC;
     fully superseded ones must be deleted."""
@@ -236,123 +218,14 @@ def test_gc_keeps_referenced_versions(spark, tmp_path, target, source):
     assert out["match-older-last@example.com"] == 5
 
 
-def test_bucketed_warehouse_merge_semantics(spark, tmp_path, target, source):
-    """Warehouse(bucketed=True): same merge semantics through the
-    catalog-bucketed snapshot path, with versioning/applied bookkeeping."""
-    wh = Warehouse(spark, str(tmp_path / "whb"), n_buckets=8, bucketed=True)
-    wh.write_visitantes(target, applied_key="seed")
-    assert wh._current_visitantes_version().startswith("tbl:")
-    wh.merge_visitantes(source, process_date=PROCESS_DATE, applied_key="b1")
-    out = {r["email"]: r for r in wh.read_visitantes().collect()}
-    assert len(out) == 5
-    assert out["match-same-month@example.com"]["visitasTotales"] == 13
-    assert out["new-visitor@example.com"]["visitasTotales"] == 2
-    assert wh.visitantes_applied() == {"seed", "b1"}
-
-
-def test_bucketed_merge_join_has_no_target_side_exchange(spark, tmp_path, target, source):
-    """The SURVEY §4.3 shuffle-free story as product code: the bucketed
-    snapshot side of the merge join must plan with NO exchange (only the
-    small batch side shuffles to match the bucket spec)."""
-    from pipeline_etl_website_visits_spark.operators.merge import visitantes_merge
-
-    wh = Warehouse(spark, str(tmp_path / "whb"), n_buckets=8, bucketed=True)
-    wh.write_visitantes(target)
-    merged = visitantes_merge(wh.read_visitantes(), source, PROCESS_DATE, null_safe=False)
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    exchanges = [
-        line for line in plan.splitlines() if "Exchange hashpartitioning" in line
-    ]
-    assert len(exchanges) == 1, plan  # batch side only; bucketed target side clean
-    assert "Bucketed: true" in plan, plan
-
-
-def test_bucketed_merge_is_exchange_free_AND_touched_bucket(spark, tmp_path, target, source):
-    """VERDICT r4 item 3: the two round-4 merge wins in the SAME mode —
-    the bucketed merge join plans with no target-side exchange (pruned
-    catalog scan stays Bucketed) AND a 1-email batch rewrites exactly one
-    bucket's files, untouched buckets carried by partition-location
-    reference."""
-    from pipeline_etl_website_visits_spark.operators.merge import visitantes_merge
-
-    root = str(tmp_path / "whbi")
-    wh = Warehouse(spark, root, n_buckets=8, bucketed=True)
-    wh.write_visitantes(target, applied_key="seed")
-    v0 = wh._current_visitantes_version()
-    assert v0.startswith("tbl:")
-    n_buckets, refs0 = wh._visitantes_manifest(v0)
-    assert n_buckets == 8
-
-    one = source.filter(F.col("email") == "match-same-month@example.com")
-    # plan check on the exact join the incremental path runs: pruned
-    # bucketed target, batch source
-    b = int(one.select(wh._bucket_col(8).alias("b")).first()["b"])
-    merged = visitantes_merge(
-        wh.read_visitantes(buckets={b}), one, PROCESS_DATE, null_safe=False
-    )
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    exchanges = [
-        line for line in plan.splitlines() if "Exchange hashpartitioning" in line
-    ]
-    assert len(exchanges) == 1, plan  # batch side only
-    assert "Bucketed: true" in plan, plan
-
-    wh.merge_visitantes(one, process_date=PROCESS_DATE, applied_key="one")
-    v1 = wh._current_visitantes_version()
-    assert v1 != v0 and v1.startswith("tbl:")
-    # file-level: the new version dir materializes EXACTLY one bucket dir
-    assert _bucket_dirs(root, wh._version_dir(v1)) == [f"bucket={b}"]
-    # manifest: touched bucket points at v1's dir, others carried at v0's
-    _, refs1 = wh._visitantes_manifest(v1)
-    assert refs1[b] == wh._version_dir(v1)
-    assert {v for bb, v in refs1.items() if bb != b} == {wh._version_dir(v0)}
-    # logical contents identical to a full merge
-    out = {r["email"]: r for r in wh.read_visitantes().collect()}
-    assert out["match-same-month@example.com"]["visitasTotales"] == 13
-    assert out["match-prev-month@example.com"]["visitasTotales"] == 20  # untouched
-    assert len(out) == 4
-    assert wh.visitantes_applied() == {"seed", "one"}
-
-
-def test_bucketed_gc_keeps_partition_referenced_dirs(spark, tmp_path, target, source):
-    """Version dirs still referenced by the current bucketed manifest (via
-    ALTER TABLE partition locations) must survive GC across several
-    incremental merges; the snapshot stays correct throughout."""
-    import os
-
-    root = str(tmp_path / "whbgc")
-    wh = Warehouse(spark, root, n_buckets=4, bucketed=True)
-    wh.write_visitantes(target, applied_key="seed")
-    for i, email in enumerate(
-        ["match-same-month@example.com", "new-visitor@example.com", "match-prev-year@example.com"]
-    ):
-        wh.merge_visitantes(
-            source.filter(F.col("email") == email),
-            process_date=PROCESS_DATE,
-            applied_key=f"k{i}",
-        )
-    cur = wh._current_visitantes_version()
-    _, refs = wh._visitantes_manifest(cur)
-    on_disk = {d for d in os.listdir(root) if d.startswith("visitantes_v")}
-    assert set(refs.values()) <= on_disk
-    out = {r["email"]: r["visitasTotales"] for r in wh.read_visitantes().collect()}
-    assert out["match-same-month@example.com"] == 13
-    assert out["new-visitor@example.com"] == 2
-    assert out["match-prev-year@example.com"] == 33
-    assert out["match-prev-month@example.com"] == 20
-    assert out["match-older-last@example.com"] == 5
-
-
-def test_bucketed_publish_crash_window_retry(
-    spark, tmp_path, target, source, any_commit_backend
-):
-    """Crash between the new bucketed version's table/dir creation and the
-    pointer flip: the old version stays current (readers never see a
-    half-published snapshot) and re-running the SAME merge completes with
-    correct totals — the retry overwrites the orphaned table/dir. Runs
-    under BOTH commit backends (VERDICT r8 item 2)."""
-    root = str(tmp_path / "whbc")
-    wh = Warehouse(spark, root, n_buckets=8, bucketed=True)
+def test_publish_crash_window_retry(spark, tmp_path, target, source, any_commit_backend):
+    """Crash between the new version's dir write and the pointer flip: the
+    old version stays current (readers never see a half-published
+    snapshot) and re-running the SAME merge completes with correct totals
+    — the retry overwrites the orphaned dir. Runs under every commit
+    backend (VERDICT r8 item 2)."""
+    root = str(tmp_path / "whc")
+    wh = Warehouse(spark, root, n_buckets=8)
     wh.write_visitantes(target, applied_key="seed")
     v0 = wh._current_visitantes_version()
     base = {r["email"]: r["visitasTotales"] for r in wh.read_visitantes().collect()}
@@ -360,8 +233,8 @@ def test_bucketed_publish_crash_window_retry(
     one = source.filter(F.col("email") == "match-same-month@example.com")
     wh.merge_visitantes(one, process_date=PROCESS_DATE, applied_key="one")
     # simulate the crash: rewind the pointer to v0 (as if the flip never
-    # happened; the v1 dir + catalog table are orphaned on disk) — through
-    # the backend, where the pointer actually lives
+    # happened; the v1 dir is orphaned on disk) — through the backend,
+    # where the pointer actually lives
     wh._publish_pointer(wh.path(wh._POINTER), v0 + "\n")
     assert wh._current_visitantes_version() == v0
     assert {
@@ -376,60 +249,58 @@ def test_bucketed_publish_crash_window_retry(
     assert "one" in wh.visitantes_applied()
 
 
-def test_bucketed_forget_rewrites_one_bucket(spark, tmp_path, target, source):
-    """GDPR erasure in bucketed mode is bucket-cost too (it previously
-    forced a full-snapshot rewrite)."""
-    root = str(tmp_path / "whbf")
-    wh = Warehouse(spark, root, n_buckets=8, bucketed=True)
+def test_merge_reads_snapshot_state_once(spark, tmp_path, target, source, monkeypatch):
+    """A steady-state merge reads the pointer once and no manifest path
+    twice: the pointer and manifest read under the writer lease serve the
+    pruned target read, the publish and the GC."""
+    wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=8)
     wh.write_visitantes(target, applied_key="seed")
-    out = wh.forget("match-prev-month@example.com")
-    assert out["visitantes"].startswith("bucket=")
-    v = wh._current_visitantes_version()
-    assert v.startswith("tbl:")
-    emails = {r["email"] for r in wh.read_visitantes().collect()}
-    assert "match-prev-month@example.com" not in emails
-    assert len(emails) == 3
+    one = source.filter(F.col("email") == "match-same-month@example.com")
+    wh.merge_visitantes(one, process_date=PROCESS_DATE, applied_key="b1")
+
+    manifests, pointers = [], []
+    read_small, read_pointer = wh._read_small_text, wh._read_pointer_text
+    monkeypatch.setattr(wh, "_read_small_text", lambda p: (manifests.append(p), read_small(p))[1])
+    monkeypatch.setattr(wh, "_read_pointer_text", lambda p: (pointers.append(p), read_pointer(p))[1])
+    wh.merge_visitantes(source, process_date=PROCESS_DATE, applied_key="b2")
+    assert manifests and len(manifests) == len(set(manifests)), manifests
+    assert len(pointers) == 1, pointers
+    monkeypatch.undo()
+    assert wh.visitantes_applied() == {"seed", "b1", "b2"}
+    out = {r["email"]: r["visitasTotales"] for r in wh.read_visitantes().collect()}
+    assert out["match-same-month@example.com"] == 16 and len(out) == 5
 
 
-def test_partitioned_to_bucketed_migration(spark, tmp_path, target, source):
-    """Opting INTO bucketed mode over an existing hash-partitioned snapshot
-    must full-rewrite into the bucketed layout — carrying plain parquet
-    files into a catalog-bucketed table by partition reference would make
-    the scan throw 'Invalid bucket file' (bucket ids come from file
-    names). The snapshot must stay readable and correct."""
-    root = str(tmp_path / "whm2")
-    whp = Warehouse(spark, root, n_buckets=8)
-    whp.write_visitantes(target, applied_key="seed")
-    assert not whp._current_visitantes_version().startswith("tbl:")
+def test_damaged_snapshot_fails_loudly(spark, tmp_path, target, source):
+    """Every publish writes ``_buckets`` before it flips the pointer, so a
+    pointer-listed version without one is damage: reading, merging and
+    erasing raise and leave the snapshot files as they were, instead of
+    rebuilding the snapshot from whatever the version dir holds."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root, n_buckets=8)
+    wh.write_visitantes(target, applied_key="seed")
+    v0 = wh._current_visitantes_version()
+    for f in ("_buckets", "._buckets.crc"):
+        if os.path.exists(os.path.join(root, v0, f)):
+            os.remove(os.path.join(root, v0, f))
 
-    whb = Warehouse(spark, root, n_buckets=8, bucketed=True)
-    whb.merge_visitantes(source, process_date=PROCESS_DATE, applied_key="m1")
-    v = whb._current_visitantes_version()
-    assert v.startswith("tbl:")
-    out = {r["email"]: r["visitasTotales"] for r in whb.read_visitantes().collect()}
-    assert out["match-same-month@example.com"] == 13 and len(out) == 5
-    assert whb.visitantes_applied() == {"seed", "m1"}
-    # and the NEXT merge in bucketed mode is incremental (layout matches)
-    one = source.filter(F.col("email") == "new-visitor@example.com")
-    whb.merge_visitantes(one, process_date=PROCESS_DATE, applied_key="m2")
-    v2 = whb._current_visitantes_version()
-    assert len(_bucket_dirs(root, whb._version_dir(v2))) == 1
-    assert whb.read_visitantes().count() == 5
+    def snapshot_files():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), root), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, files in os.walk(root)
+            for f in files
+            if os.path.relpath(d, root).startswith("visitantes") or f.startswith("visitantes")
+        )
 
-
-def test_bucketed_to_partitioned_migration(spark, tmp_path, target, source):
-    """Opting back out of bucketed mode migrates on the next merge."""
-    root = str(tmp_path / "whm")
-    whb = Warehouse(spark, root, n_buckets=8, bucketed=True)
-    whb.write_visitantes(target, applied_key="seed")
-    whp = Warehouse(spark, root, n_buckets=8)
-    whp.merge_visitantes(source, process_date=PROCESS_DATE, applied_key="m1")
-    v = whp._current_visitantes_version()
-    assert not v.startswith("tbl:")
-    assert whp._visitantes_manifest(v) is not None  # hash-partitioned again
-    out = {r["email"]: r["visitasTotales"] for r in whp.read_visitantes().collect()}
-    assert out["match-same-month@example.com"] == 13 and len(out) == 5
-    assert whp.visitantes_applied() == {"seed", "m1"}
+    before = snapshot_files()
+    with pytest.raises(FileNotFoundError, match="_buckets"):
+        wh.read_visitantes()
+    with pytest.raises(FileNotFoundError, match="_buckets"):
+        wh.merge_visitantes(source, process_date=PROCESS_DATE, applied_key="m1")
+    with pytest.raises(FileNotFoundError, match="_buckets"):
+        wh.forget("match-prev-month@example.com")
+    assert snapshot_files() == before
+    assert wh._current_visitantes_version() == v0
 
 
 def test_agg_state_merge_is_iterable_and_exact(spark):

@@ -104,3 +104,21 @@ def test_all_tables_timestamps_normalized(spark, tmp_path):
         int(x.replace(tzinfo=datetime.timezone.utc).timestamp()) for x in TS[:2]
     )
     assert vals == expected
+
+
+def test_directory_table_fans_out_by_part_sizes(spark, tmp_path):
+    """A multi-part directory table is sized by its part files, not by the
+    directory entry (a few KiB whatever it holds): at the default 64 KiB
+    per task, ~200 KiB of parts fans out past one task."""
+    import os
+
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    for i in range(4):
+        pq.write_table(
+            pa.table({"doc_id": [i], "blob": [os.urandom(50_000)]}),
+            str(table / f"part-{i:05d}.parquet"),
+        )
+    df = load_table(spark, str(tmp_path), "documents", fan_out=True)
+    assert df.rdd.getNumPartitions() > 1
+    assert df.count() == 4
