@@ -36,9 +36,12 @@ output instead of duplicating it; (2) the visitantes merge is additive
 already in the manifest skips the merge instead of double-counting;
 (3) the bitacora row is written LAST as the commit marker — a file is
 "processed" iff its bitacora row exists, and with (1)+(2) every upstream
-write is safe to redo. At 100 TB the same layout holds
-with date partitioning on top (partition by fechaProceso/nombreArchivo) or
-Delta tables for real ACID.
+write is safe to redo. Since no upstream write depends on another, a commit
+unit runs all three at once (:meth:`Warehouse.write_upstream`, called by
+both drivers) and writes no control row until all three have ended; a merge
+that lands while an append fails is covered by (2), as the retry skips it.
+At 100 TB the same layout holds with date partitioning on top (partition by
+fechaProceso/nombreArchivo) or Delta tables for real ACID.
 
 Scale (SURVEY §4.3): the visitantes snapshot is hash-bucket partitioned
 (``bucket = pmod(hash(email), N)``) with a per-version bucket manifest, so
@@ -54,6 +57,7 @@ from __future__ import annotations
 import functools
 import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 from types import SimpleNamespace
 from typing import NamedTuple
 
@@ -67,6 +71,7 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+from pyspark.util import inheritable_thread_target
 
 from pipeline_etl_website_visits_spark.etl import schema as S
 from pipeline_etl_website_visits_spark.functions import sql_ident, sql_string
@@ -111,6 +116,13 @@ _LOGS_ROW_SCHEMA = StructType(
         StructField("fecha", StringType(), False),
     ]
 )
+
+
+# Write options of the per-file writes: no _SUCCESS marker. Nothing reads
+# one (the pointer and the bitacora row are the commit points), and without
+# native libhadoop every file the local filesystem creates forks a chmod for
+# itself and one for its .crc sidecar. Compaction keeps its markers.
+_NO_SUCCESS_MARKER = {"mapreduce.fileoutputcommitter.marksuccessfuljobs": "false"}
 
 
 class _Sql(str):
@@ -416,6 +428,7 @@ class Warehouse:
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
+            .options(**_NO_SUCCESS_MARKER)
             .partitionBy("nombreArchivo")
             .parquet(self.path(table))
         )
@@ -452,6 +465,48 @@ class Warehouse:
                 finally:
                     reader.close()
         return counts
+
+    # -- one commit unit's upstream writes (K4 (1) and (2)) ------------------
+    def write_upstream(
+        self,
+        stats: DataFrame,
+        errores: DataFrame,
+        visitors: DataFrame | None,
+        keys: list[str],
+        applied_key: str,
+        process_date: str | None = None,
+    ) -> tuple[dict[str, int], dict[str, int]]:
+        """Run a commit unit's three upstream writes at once: the
+        estadisticas and errores appends of ``keys`` (:meth:`append_rows`)
+        on two pool threads, and the visitantes merge of ``visitors`` under
+        ``applied_key`` on the calling thread, under its writer lease
+        (``visitors=None`` skips the merge). At per-file sizes each write is
+        mostly fixed cost (planning, job scheduling, the commit protocol),
+        so the unit takes about as long as its slowest write, not the sum.
+
+        The pool threads take the caller's local properties, the stream
+        query's job group among them, so stopping the query cancels their
+        jobs too. Returns the two appends' per-key row counts once all three
+        writes have ended. If any failed, it raises the first failure in the
+        order estadisticas, errores, merge, still only after all three have
+        ended, so no control row is written while an upstream write runs."""
+        # one wrap per thread: a wrap clones the caller's properties once,
+        # and two threads sharing a clone would overwrite each other's SQL
+        # execution id
+        append = [inheritable_thread_target(self.spark)(self.append_rows) for _ in range(2)]
+        merge_error = None
+        with ThreadPoolExecutor(2) as pool:
+            ok = pool.submit(append[0], stats, "estadisticas", keys)
+            err = pool.submit(append[1], errores, "errores", keys)
+            if visitors is not None:
+                try:
+                    self.merge_visitantes(visitors, process_date=process_date, applied_key=applied_key)
+                except Exception as e:  # noqa: BLE001 — raised after the appends
+                    merge_error = e
+        ok_counts, err_counts = ok.result(), err.result()
+        if merge_error is not None:
+            raise merge_error
+        return ok_counts, err_counts
 
     # -- small-file compaction (SURVEY §4.3: one parquet file per micro-batch
     #    otherwise) ----------------------------------------------------------
@@ -791,9 +846,17 @@ class Warehouse:
         return self._applied_keys(self._current_visitantes_version())
 
     def _applied_keys(self, version: str | None) -> set[str]:
+        """Batch keys merged into ``version``. Every publish writes
+        ``_applied`` before it flips the pointer, so a pointer-listed version
+        without one is damage: read as empty, it would let a redo merge an
+        already-merged batch again."""
         if version is None:
             return set()
-        return set(self._read_small_text(os.path.join(self.path(version), "_applied")) or [])
+        p = os.path.join(self.path(version), "_applied")
+        lines = self._read_small_text(p)
+        if lines is None:
+            raise FileNotFoundError(f"visitantes version {version!r} has no applied-keys manifest {p}")
+        return set(lines)
 
     def visitantes_changes(self, include_same: bool = False) -> DataFrame:
         """Change data feed between the retained previous snapshot and the
@@ -915,7 +978,12 @@ class Warehouse:
         # one task per bucket, so each bucket dir gets one file instead of
         # one per upstream partition
         out = df.withColumn("bucket", self._bucket_col(snap.n_buckets)).repartition("bucket")
-        out.write.mode("overwrite").partitionBy("bucket").parquet(self.path(version))
+        (
+            out.write.mode("overwrite")
+            .options(**_NO_SUCCESS_MARKER)
+            .partitionBy("bucket")
+            .parquet(self.path(version))
+        )
         # which buckets did this write actually materialize?
         fs, vdir, _ = self._fs(self.path(version))
         written = {
@@ -990,7 +1058,8 @@ class Warehouse:
                 for i, (f, e, lv, m) in enumerate(events)
             ],
         )
-        rows.write.mode("append").partitionBy("fecha").parquet(self.path("logs"))
+        out = rows.write.mode("append").options(**_NO_SUCCESS_MARKER)
+        out.partitionBy("fecha").parquet(self.path("logs"))
 
     def file_log(self, filename: str) -> DataFrame | None:
         """The per-file trail (all stages, ordered) — the O6 debugging view."""
@@ -1006,9 +1075,8 @@ class Warehouse:
         if not rows:
             return
         stamped = [(*r, _NOW) for r in rows]
-        _jvm_rows(self.spark, BITACORA_SCHEMA, stamped).write.mode("append").parquet(
-            self.path("bitacora")
-        )
+        rows = _jvm_rows(self.spark, BITACORA_SCHEMA, stamped)
+        rows.write.mode("append").options(**_NO_SUCCESS_MARKER).parquet(self.path("bitacora"))
 
     def processed_files(self) -> set[str]:
         """Filenames with a completion marker (replaces the reference's

@@ -11,10 +11,12 @@ Scale notes: the per-file loop is about *file-granular semantics* (each file
 is its own commit unit, like the reference). A file costs the Spark jobs of
 its writes only — the two appends, the merge and the control rows; the
 header peek, the schema and the ok/error counts add none — so at small files
-that fixed per-job cost dominates. With millions of small files you would
-instead group valid files by header signature and process each group as ONE
-job with ``_metadata.file_path`` lineage — ``transform_group`` implements
-that path.
+that fixed per-job cost dominates. The two appends and the merge run at
+once (:meth:`Warehouse.write_upstream`), so a file pays the slowest of the
+three rather than their sum; the control rows follow them. With millions of
+small files you would instead group valid files by header signature and
+process each group as ONE job with ``_metadata.file_path`` lineage —
+``transform_group`` implements that path.
 """
 
 from __future__ import annotations
@@ -128,6 +130,11 @@ def process_file(
     first use leaves the session unserializable, which breaks later ML
     closures that capture the session.)
 
+    The estadisticas and errores appends and the visitantes merge run
+    concurrently in :meth:`Warehouse.write_upstream`; the trail flush and
+    the bitacora row (marker or FALLO_SISTEMA) wait until all three have
+    ended, so the marker stays the last write (K4).
+
     O6: every stage appends to a per-file event buffer, flushed as ONE
     parquet append at the end of the file's run (success or failure) — the
     structured replacement for the reference's logs/DDMMYY/<file>.log.
@@ -146,23 +153,24 @@ def process_file(
     try:
         raw = read_report(spark, filepath, header)
         stats, visitors, errores = T.transform_file(raw, filename)
-        ok_count = warehouse.append_rows(stats, "estadisticas", [filename])[filename]
-        err_count = warehouse.append_rows(errores, "errores", [filename])[filename]
-        trail.append(
-            (filename, "TRANSFORMADO", "INFO", f"ok={ok_count} errores={err_count}")
-        )
         # redo-safety: if a prior run crashed AFTER merging this file into
         # visitantes but BEFORE the bitacora marker, the snapshot manifest
         # already lists the file — re-applying would double-count. An explicit
         # reprocess (reapply_merge=True) is a deliberate re-merge and skips
         # the guard.
-        if reapply_merge or filename not in warehouse.visitantes_applied():
-            # incremental path: reads and rewrites only the hash buckets
-            # containing this batch's emails (load.merge_visitantes)
-            warehouse.merge_visitantes(visitors, process_date=process_date, applied_key=filename)
-            trail.append((filename, "MERGE", "INFO", "visitantes merged"))
-        else:
-            trail.append((filename, "MERGE", "INFO", "skipped (already applied)"))
+        merge = reapply_merge or filename not in warehouse.visitantes_applied()
+        # incremental merge: reads and rewrites only the hash buckets
+        # containing this file's emails (load.merge_visitantes)
+        ok_counts, err_counts = warehouse.write_upstream(
+            stats, errores, visitors if merge else None, [filename], filename, process_date
+        )
+        ok_count, err_count = ok_counts[filename], err_counts[filename]
+        trail.append(
+            (filename, "TRANSFORMADO", "INFO", f"ok={ok_count} errores={err_count}")
+        )
+        trail.append(
+            (filename, "MERGE", "INFO", "visitantes merged" if merge else "skipped (already applied)")
+        )
 
         status = S.STATUS_OK_WITH_ERRORS if err_count > 0 else S.STATUS_OK  # D9 fixed
         # trail flushed BEFORE the bitacora commit marker: the marker must

@@ -21,9 +21,11 @@ sink therefore keys its non-idempotent effects on ``batch_id``:
 estadisticas/errores use per-file dynamic partition overwrite (idempotent),
 the additive visitantes merge is skipped when ``batch:<id>`` is already in
 the snapshot's ``_applied`` manifest, and bitacora rows are skipped for
-files that already carry a completion marker. A batch's bitacora rows (ok
-and layout-fail alike) are written last, as one append, so a crash leaves
-all of them or none. Replays are thus no-ops.
+files that already carry a completion marker. The two appends and the
+merge run at once (:meth:`Warehouse.write_upstream`, as in the batch
+driver); a batch's bitacora rows (ok and layout-fail alike) are written
+after all three have ended, as one append, so a crash leaves all of them or
+none. Replays are thus no-ops.
 """
 
 from __future__ import annotations
@@ -52,7 +54,9 @@ def read_report_stream(spark: SparkSession, input_dir: str, max_files_per_trigge
 
 def _process_micro_batch(warehouse: Warehouse, process_date: str | None):
     def inner(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        # the batch's files; none means an empty batch
+        paths = [r[0] for r in batch_df.select("__path").distinct().collect()]
+        if not paths:
             return
         # sink-side idempotence for replayed micro-batches (at-least-once
         # foreachBatch): skip already-merged batches / already-marked files
@@ -64,7 +68,6 @@ def _process_micro_batch(warehouse: Warehouse, process_date: str | None):
         # headers of this micro-batch's files (driver-side, O(1) per file —
         # same check as the batch driver) and quarantine layout failures.
         spark = batch_df.sparkSession
-        paths = [r[0] for r in batch_df.select("__path").distinct().collect()]
         bad_files = []
         for p in paths:
             from pipeline_etl_website_visits_spark.etl.pipeline import read_header
@@ -86,14 +89,12 @@ def _process_micro_batch(warehouse: Warehouse, process_date: str | None):
         errores = T.expand_errors(bad, "nombreArchivo")
         stats = T.normalize_and_cast(ok)
 
-        # per-file bitacora counts come back from the appends themselves
-        ok_counts = warehouse.append_rows(stats, "estadisticas", names)
-        err_counts = warehouse.append_rows(errores, "errores", names)
-
-        if not merge_done:
-            visitors = T.visitors_aggregate(stats)
-            # incremental: touches only the hash buckets of this batch's emails
-            warehouse.merge_visitantes(visitors, process_date=process_date, applied_key=batch_key)
+        # per-file bitacora counts come back from the appends themselves; the
+        # merge touches only the hash buckets of this batch's emails
+        visitors = None if merge_done else T.visitors_aggregate(stats)
+        ok_counts, err_counts = warehouse.write_upstream(
+            stats, errores, visitors, names, batch_key, process_date
+        )
 
         for fname in names:
             if fname in marked:

@@ -29,6 +29,67 @@ def spark():
 SF_DIR = "/root/testdata/sf0.001"
 
 
+class JobGroups:
+    """Attributes Spark jobs by job group. :meth:`mark` wraps Warehouse
+    methods so that each sets :attr:`MARK` as the job group of the thread it
+    runs on, a pool thread of ``Warehouse.write_upstream`` included, and
+    puts the previous group back after; :meth:`of` reads each job's group
+    back from the status store. Unlike job-id deltas around each call, this
+    holds when calls overlap."""
+
+    MARK = "warehouse-call"
+    _KEY = "spark.jobGroup.id"
+
+    def __init__(self, spark, monkeypatch):
+        self.sc = spark.sparkContext
+        self._monkeypatch = monkeypatch
+
+    def next_job(self) -> int:
+        return int(self.sc._jsc.sc().dagScheduler().nextJobId())
+
+    def mark(self, *attrs: str) -> None:
+        import functools
+
+        from pipeline_etl_website_visits_spark.etl.load import Warehouse
+
+        sc, key, mark = self.sc, self._KEY, self.MARK
+
+        def grouped(fn):
+            @functools.wraps(fn)
+            def wrapper(*args, **kwargs):
+                prev = sc.getLocalProperty(key)
+                sc.setLocalProperty(key, mark)
+                try:
+                    return fn(*args, **kwargs)
+                finally:
+                    sc.setLocalProperty(key, prev)
+
+            return wrapper
+
+        for attr in attrs:
+            self._monkeypatch.setattr(Warehouse, attr, grouped(getattr(Warehouse, attr)))
+
+    def of(self, j0: int, j1: int) -> list[str | None]:
+        """The job group of each job with an id in ``[j0, j1)``."""
+        jsc = self.sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()  # the store is filled by a listener
+        store = jsc.statusStore()
+        out = []
+        for j in range(j0, j1):
+            group = store.job(j).jobGroup()
+            out.append(group.get() if group.isDefined() else None)
+        return out
+
+    def outside(self, j0: int, j1: int) -> int:
+        """Jobs in ``[j0, j1)`` that ran outside every marked call."""
+        return sum(g != self.MARK for g in self.of(j0, j1))
+
+
+@pytest.fixture()
+def job_groups(spark, monkeypatch):
+    return JobGroups(spark, monkeypatch)
+
+
 class FlakyBackend:
     """Transient-fault injector (VERDICT r9 item 4): delegates every
     primitive, but each DISTINCT (primitive, path) fails exactly once

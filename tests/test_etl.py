@@ -279,45 +279,102 @@ def test_control_rows_are_jvm_local(spark, tmp_path, monkeypatch):
     assert wh.read_visitantes().count() == 0
 
 
-def test_process_file_runs_jobs_only_in_warehouse_writes(spark, report_dir, tmp_path, monkeypatch):
+def test_process_file_runs_jobs_only_in_warehouse_writes(spark, report_dir, tmp_path, job_groups):
     """process_file itself schedules no Spark job (no schema inference, no
     count()) and caches nothing: every job of a file runs inside a
-    Warehouse call, and the counts come back from the appends."""
-    import functools
-
-    def next_job():
-        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
-
-    inside = [0]
-
-    def counted(fn):
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            j0 = next_job()
-            try:
-                return fn(*args, **kwargs)
-            finally:
-                inside[0] += next_job() - j0
-
-        return wrapper
-
-    for attr in ("append_rows", "merge_visitantes", "visitantes_applied",
-                 "log_bitacora", "log_file_events"):
-        monkeypatch.setattr(Warehouse, attr, counted(getattr(Warehouse, attr)))
+    Warehouse call, and the counts come back from the appends. Jobs are
+    told apart by job group, because the upstream writes overlap."""
+    job_groups.mark("append_rows", "merge_visitantes", "visitantes_applied",
+                    "log_bitacora", "log_file_events")
     path = FX.make_mixed(report_dir)
     wh = Warehouse(spark, str(tmp_path / "wh"))
     spark.catalog.clearCache()
-    j0 = next_job()
+    j0 = job_groups.next_job()
     res = process_file(spark, wh, path, process_date="2026-03-28")
-    outside = next_job() - j0 - inside[0]
+    groups = job_groups.of(j0, job_groups.next_job())
     assert (res.status, res.ok_count, res.err_count) == (S.STATUS_OK_WITH_ERRORS, 70, 50)
-    assert inside[0] > 0
+    assert groups.count(job_groups.MARK) > 0
+    outside = len(groups) - groups.count(job_groups.MARK)
     assert outside == 0  # no schema inference job, no count() actions
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     trail = {r["etapa"]: r["mensaje"] for r in wh.file_log("report_mixed.txt").collect()}
     assert trail["TRANSFORMADO"] == "ok=70 errores=50"
     # the session stays serializable: ML closures that capture it still ship
     spark.sparkContext._jvm.org.apache.spark.util.Utils.serialize(spark._jsparkSession)
+
+
+def test_upstream_writes_overlap(spark, report_dir, tmp_path, monkeypatch):
+    """The visitantes merge starts while the estadisticas append is still
+    running: the append waits for the merge to start, which it can only do
+    in time if the two run at once. The trail keeps its stage order."""
+    import threading
+
+    merge_started = threading.Event()
+    real_append, real_merge = Warehouse.append_rows, Warehouse.merge_visitantes
+
+    def append_rows(self, df, table, keys):
+        if table == "estadisticas" and not merge_started.wait(30):
+            raise TimeoutError("the merge did not start while the append ran")
+        return real_append(self, df, table, keys)
+
+    def merge_visitantes(self, *args, **kwargs):
+        merge_started.set()
+        return real_merge(self, *args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "append_rows", append_rows)
+    monkeypatch.setattr(Warehouse, "merge_visitantes", merge_visitantes)
+    path = FX.make_mixed(report_dir)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    res = process_file(spark, wh, path, process_date="2026-03-28")
+    assert (res.status, res.ok_count, res.err_count) == (S.STATUS_OK_WITH_ERRORS, 70, 50)
+    trail = [(r["etapa"], r["mensaje"]) for r in wh.file_log("report_mixed.txt").collect()]
+    assert trail == [
+        ("RECIBIDO", path),
+        ("LAYOUT", "layout ok"),
+        ("TRANSFORMADO", "ok=70 errores=50"),
+        ("MERGE", "visitantes merged"),
+        ("CARGADO", S.STATUS_OK_WITH_ERRORS),
+    ]
+
+
+def test_upstream_jobs_keep_the_callers_job_group(spark, report_dir, tmp_path, job_groups):
+    """The appends' pool threads take the caller's local properties, so a
+    stream query's job group (which stopping the query cancels) covers
+    every job of the unit."""
+    path = FX.make_mixed(report_dir)
+    stats, visitors, errores = transform_file(read_report(spark, path), "report_mixed.txt")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "one-commit-unit")
+    try:
+        j0 = job_groups.next_job()
+        counts = wh.write_upstream(stats, errores, visitors, ["report_mixed.txt"], "report_mixed.txt")
+        j1 = job_groups.next_job()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts == ({"report_mixed.txt": 70}, {"report_mixed.txt": 50})
+    assert j1 > j0
+    assert set(job_groups.of(j0, j1)) == {"one-commit-unit"}
+
+
+def test_per_file_writes_leave_no_success_marker(spark, report_dir, tmp_path):
+    """The per-file writes skip the _SUCCESS marker: the pointer and the
+    bitacora row are the commit points, and each marker is two more files
+    (the marker and its checksum) on the local filesystem."""
+    FX.make_allvalid(report_dir)
+    FX.make_mixed(report_dir)
+    FX.make_badlayout(report_dir)
+    wh_root = str(tmp_path / "wh")
+    process_directory(spark, report_dir, wh_root, process_date="2026-03-28")
+    tables = set(os.listdir(wh_root))
+    assert {"estadisticas", "errores", "logs", "bitacora", "visitantes_v1"} <= tables
+    markers = [
+        os.path.join(d, f)
+        for d, _, files in os.walk(wh_root)
+        for f in files
+        if f in ("_SUCCESS", "._SUCCESS.crc")
+    ]
+    assert markers == []
 
 
 def test_append_rows_counts_what_the_write_added(spark, tmp_path):
@@ -382,19 +439,23 @@ def test_duplicated_header_column_status(spark, report_dir, tmp_path):
 
 @pytest.fixture()
 def py4j_calls(spark, monkeypatch):
-    """``py4j_calls()`` is the number of commands this thread has sent to
-    the JVM so far. py4j's finalizer thread, which releases garbage-collected
+    """``py4j_calls()`` is the number of commands sent to the JVM so far
+    from any thread, the pool threads of ``Warehouse.write_upstream``
+    included. py4j's finalizer thread, which releases garbage-collected
     Java references at its own pace, is not counted."""
     import threading
+
+    from py4j.clientserver import FinalizerWorker
 
     client = spark.sparkContext._gateway._gateway_client
     real = client.send_command
     sent = [0]
-    caller = threading.get_ident()
+    lock = threading.Lock()
 
     def counting(*args, **kwargs):
-        if threading.get_ident() == caller:
-            sent[0] += 1
+        if not isinstance(threading.current_thread(), FinalizerWorker):
+            with lock:
+                sent[0] += 1
         return real(*args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting)

@@ -10,14 +10,17 @@ no-op; (c) the reference's backup/zip/retention post-processing
 import datetime
 import os
 import shutil
+import threading
 import zipfile
 
 import pyspark.sql.functions as F
+import pytest
 
 from pipeline_etl_website_visits_spark.etl import schema as S
 from pipeline_etl_website_visits_spark.etl.backup import archive_processed
 from pipeline_etl_website_visits_spark.etl.load import Warehouse
-from pipeline_etl_website_visits_spark.etl.pipeline import process_directory, process_file
+from pipeline_etl_website_visits_spark.etl.pipeline import process_directory, process_file, read_report
+from pipeline_etl_website_visits_spark.etl.transform import transform_file
 from pipeline_etl_website_visits_spark.streaming.visits_stream import _process_micro_batch
 
 from tests import fixtures as FX
@@ -48,6 +51,124 @@ def test_crash_between_merge_and_marker_does_not_double_count(spark, tmp_path):
     # a deliberate reprocess is still allowed to re-merge
     process_file(spark, wh, path, process_date="2026-03-28", reapply_merge=True)
     assert _totals(wh) == 20
+
+
+def _visitantes(wh):
+    return sorted(tuple(r) for r in wh.read_visitantes().collect())
+
+
+def _stages(wh, filename):
+    return [r["etapa"] for r in wh.file_log(filename).collect()]
+
+
+def _clean_run(spark, tmp_path, path):
+    wh = Warehouse(spark, str(tmp_path / "clean"))
+    assert process_file(spark, wh, path, process_date="2026-03-28").status == S.STATUS_OK_WITH_ERRORS
+    return _visitantes(wh)
+
+
+def test_failed_merge_is_marked_after_both_appends(spark, tmp_path, monkeypatch):
+    """A merge that fails while the appends run: the FALLO_SISTEMA row is
+    written only after both appends have returned, and the retry commits
+    the file as a clean run would."""
+    rep = tmp_path / "in"
+    rep.mkdir()
+    path = FX.make_mixed(str(rep))
+    clean = _clean_run(spark, tmp_path, path)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    events = []
+    merge_failed = threading.Event()
+    real_append, real_bitacora = Warehouse.append_rows, Warehouse.log_bitacora
+
+    def append_rows(self, df, table, keys):
+        merge_failed.wait(30)  # the appends start once the merge has failed
+        out = real_append(self, df, table, keys)
+        events.append(f"append {table}")
+        return out
+
+    def merge_visitantes(self, *args, **kwargs):
+        merge_failed.set()
+        raise RuntimeError("injected merge failure")
+
+    def log_bitacora(self, rows):
+        events.append(f"bitacora {rows[0][3]}")
+        return real_bitacora(self, rows)
+
+    monkeypatch.setattr(Warehouse, "append_rows", append_rows)
+    monkeypatch.setattr(Warehouse, "merge_visitantes", merge_visitantes)
+    monkeypatch.setattr(Warehouse, "log_bitacora", log_bitacora)
+    assert process_file(spark, wh, path, process_date="2026-03-28").status == S.STATUS_SYSTEM_FAIL
+    assert sorted(events[:2]) == ["append errores", "append estadisticas"]
+    assert events[2:] == [f"bitacora {S.STATUS_SYSTEM_FAIL}"]
+    assert _stages(wh, "report_mixed.txt") == ["RECIBIDO", "LAYOUT", "FALLO"]
+    assert wh.read_visitantes().count() == 0
+
+    monkeypatch.undo()
+    res = process_file(spark, wh, path, process_date="2026-03-28")
+    assert (res.status, res.ok_count, res.err_count) == (S.STATUS_OK_WITH_ERRORS, 70, 50)
+    assert _visitantes(wh) == clean
+
+
+def test_failed_append_after_merge_retry_skips_merge(spark, tmp_path, monkeypatch):
+    """An append that fails while the merge commits: the file is marked
+    FALLO_SISTEMA, and the retry skips the merge through the _applied
+    manifest instead of counting the file twice."""
+    rep = tmp_path / "in"
+    rep.mkdir()
+    path = FX.make_mixed(str(rep))
+    clean = _clean_run(spark, tmp_path, path)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    merged = threading.Event()
+    real_append, real_merge = Warehouse.append_rows, Warehouse.merge_visitantes
+
+    def append_rows(self, df, table, keys):
+        if table == "errores":
+            merged.wait(30)  # fail once the merge has committed
+            raise RuntimeError("injected append failure")
+        return real_append(self, df, table, keys)
+
+    def merge_visitantes(self, *args, **kwargs):
+        try:
+            return real_merge(self, *args, **kwargs)
+        finally:
+            merged.set()
+
+    monkeypatch.setattr(Warehouse, "append_rows", append_rows)
+    monkeypatch.setattr(Warehouse, "merge_visitantes", merge_visitantes)
+    assert process_file(spark, wh, path, process_date="2026-03-28").status == S.STATUS_SYSTEM_FAIL
+    assert "report_mixed.txt" in wh.visitantes_applied()
+    assert _visitantes(wh) == clean
+
+    monkeypatch.undo()
+    res = process_file(spark, wh, path, process_date="2026-03-28")
+    assert (res.status, res.ok_count, res.err_count) == (S.STATUS_OK_WITH_ERRORS, 70, 50)
+    trail = [(r["etapa"], r["mensaje"]) for r in wh.file_log("report_mixed.txt").collect()]
+    assert ("MERGE", "skipped (already applied)") in trail
+    assert _visitantes(wh) == clean
+    assert wh.read("errores").count() == 50
+
+
+def test_missing_applied_manifest_fails_loudly(spark, tmp_path):
+    """A pointer-listed version without its _applied manifest is damage:
+    read as empty, it would let a redo merge a merged file again."""
+    rep = tmp_path / "in"
+    rep.mkdir()
+    path = FX.make_allvalid(str(rep))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    process_file(spark, wh, path, process_date="2026-03-28")
+    before = _visitantes(wh)
+    vdir = wh.path(wh._current_visitantes_version())
+    for name in ("_applied", "._applied.crc"):
+        os.remove(os.path.join(vdir, name))
+
+    with pytest.raises(FileNotFoundError, match="_applied"):
+        wh.visitantes_applied()
+    _, visitors, _ = transform_file(read_report(spark, path), "report_allvalid.txt")
+    with pytest.raises(FileNotFoundError, match="_applied"):
+        wh.merge_visitantes(visitors, process_date="2026-03-28", applied_key="report_allvalid.txt")
+    assert process_file(spark, wh, path, process_date="2026-03-28").status == S.STATUS_SYSTEM_FAIL
+    assert _visitantes(wh) == before
+    assert _totals(wh) == 10
 
 
 def test_stream_microbatch_replay_is_noop(spark, tmp_path):

@@ -1,5 +1,7 @@
 """Streaming-mode tests: visits file-stream ETL + event-time windows."""
 
+import os
+
 import pyspark.sql.functions as F
 
 from pipeline_etl_website_visits_spark.etl.load import Warehouse
@@ -1586,4 +1588,65 @@ def test_visits_stream_batch_caches_nothing(spark, tmp_path, monkeypatch):
         "report_allvalid.txt": (100, 0, "Completado"),
         "report_mixed.txt": (70, 50, "Completado con errores"),
         "report_badlayout.txt": (0, 0, "FALLO_LAYOUT"),
+    }
+
+
+def test_visits_stream_batch_runs_one_job_of_its_own(spark, tmp_path, monkeypatch, job_groups):
+    """Outside its Warehouse calls, a micro-batch body runs one job: the
+    collect of its file paths, which also tells an empty batch. Jobs are
+    told apart by job group, because the upstream writes overlap. Adaptive
+    execution is off, as in the bench profile: with it on, the collect's
+    shuffle stage runs as a job of its own."""
+    from pipeline_etl_website_visits_spark.streaming import visits_stream
+
+    job_groups.mark("append_rows", "merge_visitantes", "visitantes_applied",
+                    "processed_files", "log_bitacora")
+    spans = []
+    make_body = visits_stream._process_micro_batch
+
+    def measured(warehouse, process_date):
+        body = make_body(warehouse, process_date)
+
+        def inner(batch_df, batch_id):
+            j0 = job_groups.next_job()
+            try:
+                return body(batch_df, batch_id)
+            finally:
+                spans.append((j0, job_groups.next_job()))
+
+        return inner
+
+    monkeypatch.setattr(visits_stream, "_process_micro_batch", measured)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    FX.make_allvalid(str(in_dir))
+    FX.make_mixed(str(in_dir))
+    FX.make_badlayout(str(in_dir))
+    wh_root = str(tmp_path / "wh")
+    empty = spark.range(0).selectExpr("'' AS __path", "'' AS nombreArchivo")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        q = start_visits_stream(
+            spark, str(in_dir), wh_root, str(tmp_path / "ckpt"), process_date="2026-03-28",
+            max_files_per_trigger=2,
+        )
+        q.awaitTermination(120)
+        # an empty batch runs that one job and writes nothing
+        body = make_body(Warehouse(spark, str(tmp_path / "wh_empty")), "2026-03-28")
+        j0 = job_groups.next_job()
+        body(empty, 0)
+        empty_jobs = job_groups.next_job() - j0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert q.exception() is None
+    assert len(spans) == 2
+    assert [job_groups.outside(j0, j1) for j0, j1 in spans] == [1, 1]
+    assert empty_jobs == 1
+    assert not os.path.exists(tmp_path / "wh_empty")
+    bit = {r["nombreArchivo"]: r["estatus"] for r in Warehouse(spark, wh_root).read("bitacora").collect()}
+    assert bit == {
+        "report_allvalid.txt": "Completado",
+        "report_mixed.txt": "Completado con errores",
+        "report_badlayout.txt": "FALLO_LAYOUT",
     }
