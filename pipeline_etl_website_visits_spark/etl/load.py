@@ -40,6 +40,9 @@ write is safe to redo. Since no upstream write depends on another, a commit
 unit runs all three at once (:meth:`Warehouse.write_upstream`, called by
 both drivers) and writes no control row until all three have ended; a merge
 that lands while an append fails is covered by (2), as the retry skips it.
+The logs trail is not an upstream write: it is informational, and the batch
+driver appends it beside the marker, at the same time; a crash between the
+two can leave a committed file without its trail.
 At 100 TB the same layout holds with date partitioning on top (partition by
 fechaProceso/nombreArchivo) or Delta tables for real ACID.
 
@@ -176,11 +179,12 @@ def _bucket_sql(n_buckets: int) -> str:
 
 
 class _Snapshot(NamedTuple):
-    """The visitantes pointer and the current version's bucket manifest."""
+    """The visitantes pointer and the current version's two manifests."""
 
     versions: list[str]  # retained versions, current first
     n_buckets: int
     refs: dict[int, str]  # bucket -> version dir holding it
+    applied: set[str]  # batch keys merged into the current version
 
     @property
     def current(self) -> str | None:
@@ -747,12 +751,14 @@ class Warehouse:
         return n_buckets, refs
 
     def _visitantes_state(self) -> _Snapshot:
-        """The pointer and the current version's manifest, read once per
-        write (under the writer lease)."""
+        """The pointer and the current version's manifests, read once per
+        write (under the writer lease), before it writes anything."""
         versions = self._visitantes_pointer()
         if not versions:
-            return _Snapshot([], self.n_buckets, {})
-        return _Snapshot(versions, *self._visitantes_manifest(versions[0]))
+            return _Snapshot([], self.n_buckets, {}, set())
+        return _Snapshot(
+            versions, *self._visitantes_manifest(versions[0]), self._applied_keys(versions[0])
+        )
 
     def _read_refs(self, refs: dict[int, str], buckets: set[int] | None = None) -> DataFrame:
         """The rows of the bucket dirs ``refs`` names, or of those among
@@ -922,6 +928,11 @@ class Warehouse:
         per-batch cost is ∝ (touched buckets) ≈ |batch| × bucket size,
         independent of total snapshot size. Untouched buckets carry over by
         manifest reference, and the pointer flip keeps crash atomicity.
+
+        Into an existing snapshot a merge runs two jobs: a global aggregate
+        for the touched buckets, then the write, whose one shuffle per input
+        serves both the join and the bucket layout (:meth:`_laid_out`). A
+        first load has no target to prune, so it runs the write alone.
         """
         with self._lease("visitantes-writer"):
             self._merge_visitantes_locked(
@@ -937,22 +948,52 @@ class Warehouse:
         from pipeline_etl_website_visits_spark.operators.merge import visitantes_merge
 
         snap = self._visitantes_state()
-        # touched buckets: bounded driver-side collect (≤ n_buckets values)
-        touched = {
-            int(r[0])
-            for r in source.selectExpr(f"{_bucket_sql(snap.n_buckets)} AS b").distinct().collect()
-        }
-        if not touched:
-            return
+        touched = None
+        if snap.refs:
+            # touched buckets: one global aggregate, ≤ n_buckets values back.
+            # With no bucket refs (a first load) there is no target to
+            # prune, so no job.
+            touched = set(source.selectExpr(f"collect_set({_bucket_sql(snap.n_buckets)})").first()[0])
+            if not touched:
+                return
         target = self._read_refs(snap.refs, touched)
-        merged = visitantes_merge(target, source, process_date=process_date)
-        self._publish_visitantes(merged, snap, snap.refs, applied_key=applied_key)
+        merged = visitantes_merge(
+            self._laid_out(target, snap.n_buckets),
+            self._laid_out(source, snap.n_buckets),
+            process_date=process_date,
+        )
+        version = self._write_version(merged, snap)
+        if touched is None:
+            touched = self._written_buckets(version)
+            if not touched:
+                # a first load with no rows: publish nothing
+                fs, vdir, _ = self._fs(self.path(version))
+                fs.delete(vdir, True)
+                return
+        # a merge writes exactly the buckets it touched: every touched
+        # bucket holds a source row, and the target was pruned to them
+        self._publish_version(version, snap, snap.refs, touched, applied_key)
 
     def write_visitantes(self, df: DataFrame, applied_key: str | None = None) -> None:
         """Full snapshot (re)write — initial load. The per-batch path is
         ``merge_visitantes`` (touched buckets only)."""
         with self._lease("visitantes-writer"):
             self._publish_visitantes(df, self._visitantes_state(), {}, applied_key=applied_key)
+
+    def _laid_out(self, df: DataFrame, n_buckets: int) -> DataFrame:
+        """``df`` hash-partitioned on email into m tasks, m the largest
+        divisor of ``n_buckets`` within ``spark.sql.shuffle.partitions``.
+
+        As m | ``n_buckets``, task ``pmod(hash(email), m)`` holds whole
+        buckets (``bucket = pmod(hash(email), n_buckets)``), so the bucket
+        write puts one file in each bucket dir. The merge lays out both join
+        inputs: the shuffle that serves the join serves the layout too, and
+        on an aggregate already partitioned this way (m equal to the shuffle
+        partitions) Spark plans no shuffle at all. A NULL email hashes apart
+        from its bucket (``''``); the merge's inputs carry none."""
+        cap = min(n_buckets, int(self.spark.conf.get("spark.sql.shuffle.partitions")))
+        m = max(d for d in range(1, cap + 1) if n_buckets % d == 0)
+        return df.repartition(m, "email")
 
     def _publish_visitantes(
         self,
@@ -961,36 +1002,50 @@ class Warehouse:
         carried: dict[int, str],
         applied_key: str | None,
     ) -> None:
-        """Write ``df`` into the bucket dirs of the version after ``snap``,
-        carry ``carried`` entries whose bucket is absent from ``df`` by
-        reference, publish.
+        """Lay ``df`` out, write it as the version after ``snap`` and publish
+        it, carrying ``carried`` entries whose bucket it does not hold."""
+        version = self._write_version(self._laid_out(df, snap.n_buckets), snap)
+        self._publish_version(version, snap, carried, self._written_buckets(version), applied_key)
 
-        Publish order (crash-safe): data dirs → ``_applied`` + ``_buckets``
-        manifests inside the version dir → atomic pointer rewrite. A crash at
-        any earlier point leaves the previous version intact and current.
-        """
-        applied = self._applied_keys(snap.current)
-        if applied_key is not None:
-            applied.add(applied_key)
+    def _write_version(self, df: DataFrame, snap: _Snapshot) -> str:
+        """Write ``df`` (laid out by :meth:`_laid_out`) into the bucket dirs
+        of the version after ``snap``; returns that version's name."""
         n = int(snap.current.rsplit("_v", 1)[1]) + 1 if snap.current else 0
         version = f"visitantes_v{n}"
-
-        # one task per bucket, so each bucket dir gets one file instead of
-        # one per upstream partition
-        out = df.withColumn("bucket", self._bucket_col(snap.n_buckets)).repartition("bucket")
+        out = df.withColumn("bucket", self._bucket_col(snap.n_buckets))
         (
             out.write.mode("overwrite")
             .options(**_NO_SUCCESS_MARKER)
             .partitionBy("bucket")
             .parquet(self.path(version))
         )
-        # which buckets did this write actually materialize?
+        return version
+
+    def _written_buckets(self, version: str) -> set[int]:
+        """The bucket dirs ``version``'s write materialized (one listing)."""
         fs, vdir, _ = self._fs(self.path(version))
-        written = {
+        return {
             int(str(st.getPath().getName()).split("=", 1)[1])
             for st in fs.listStatus(vdir)
             if str(st.getPath().getName()).startswith("bucket=")
         }
+
+    def _publish_version(
+        self,
+        version: str,
+        snap: _Snapshot,
+        carried: dict[int, str],
+        written: set[int],
+        applied_key: str | None,
+    ) -> None:
+        """Publish the written ``version``: its ``written`` buckets, plus
+        ``carried`` entries for every other bucket by reference.
+
+        Publish order (crash-safe): data dirs → ``_applied`` + ``_buckets``
+        manifests inside the version dir → atomic pointer rewrite. A crash at
+        any earlier point leaves the previous version intact and current.
+        """
+        applied = snap.applied | ({applied_key} if applied_key is not None else set())
         refs = {b: ver for b, ver in carried.items() if b not in written}
         refs.update({b: version for b in written})
 

@@ -13,10 +13,11 @@ its writes only — the two appends, the merge and the control rows; the
 header peek, the schema and the ok/error counts add none — so at small files
 that fixed per-job cost dominates. The two appends and the merge run at
 once (:meth:`Warehouse.write_upstream`), so a file pays the slowest of the
-three rather than their sum; the control rows follow them. With millions of
-small files you would instead group valid files by header signature and
-process each group as ONE job with ``_metadata.file_path`` lineage —
-``transform_group`` implements that path.
+three rather than their sum; the control rows follow them, the trail and
+the bitacora marker side by side. With millions of small files you would
+instead group valid files by header signature and process each group as ONE
+job with ``_metadata.file_path`` lineage — ``transform_group`` implements
+that path.
 """
 
 from __future__ import annotations
@@ -24,10 +25,12 @@ from __future__ import annotations
 import csv
 import io
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.util import inheritable_thread_target
 
 from pipeline_etl_website_visits_spark.etl import schema as S
 from pipeline_etl_website_visits_spark.etl import transform as T
@@ -131,13 +134,17 @@ def process_file(
     closures that capture the session.)
 
     The estadisticas and errores appends and the visitantes merge run
-    concurrently in :meth:`Warehouse.write_upstream`; the trail flush and
-    the bitacora row (marker or FALLO_SISTEMA) wait until all three have
-    ended, so the marker stays the last write (K4).
+    concurrently in :meth:`Warehouse.write_upstream`; the bitacora row
+    (marker or FALLO_SISTEMA) waits until all three have ended, so the
+    marker stays the last upstream write (K4).
 
     O6: every stage appends to a per-file event buffer, flushed as ONE
     parquet append at the end of the file's run (success or failure) — the
-    structured replacement for the reference's logs/DDMMYY/<file>.log.
+    structured replacement for the reference's logs/DDMMYY/<file>.log. On
+    success the trail is written beside the marker, at the same time; a
+    crash between the two can leave a committed file without its trail, the
+    same loss as a failed trail append. ``process_file`` returns only after
+    both have ended.
     """
     filename = os.path.basename(filepath)
     trail: list[tuple[str, str, str, str]] = [(filename, "RECIBIDO", "INFO", filepath)]
@@ -173,13 +180,16 @@ def process_file(
         )
 
         status = S.STATUS_OK_WITH_ERRORS if err_count > 0 else S.STATUS_OK  # D9 fixed
-        # trail flushed BEFORE the bitacora commit marker: the marker must
-        # stay the LAST write (K4 protocol), and a failing informational
-        # logs-append must not retroactively mark a committed file FALLO.
+        # the trail is flushed on a pool thread while the bitacora commit
+        # marker is written: the marker stays the last upstream write (K4),
+        # and the flush swallows its own failures, so a failing logs append
+        # cannot mark a committed file FALLO. Leaving the pool waits for the
+        # flush, on the failure path too.
         trail.append((filename, "CARGADO", "INFO", status))
-        _flush_trail(warehouse, trail)
-        trail = []  # flushed — the except path appends only its own suffix
-        warehouse.log_bitacora([(filename, ok_count, err_count, status)])  # commit marker, last
+        with ThreadPoolExecutor(1) as pool:
+            pool.submit(inheritable_thread_target(spark)(_flush_trail), warehouse, trail)
+            trail = []  # flushed — the except path appends only its own suffix
+            warehouse.log_bitacora([(filename, ok_count, err_count, status)])  # commit marker
         return FileResult(filename, status, ok_count, err_count, extra_columns=extra)
     except Exception as e:  # noqa: BLE001 — per-file isolation (O4)
         warehouse.log_bitacora([(filename, 0, 0, S.STATUS_SYSTEM_FAIL)])

@@ -20,7 +20,9 @@ by Delta's MERGE INTO which has identical semantics.
 
 :func:`visitantes_merge` writes its projections and join condition as SQL
 text, because each classic ``Column`` call costs about a dozen py4j round
-trips, and the merge is built once per committed file.
+trips, and the merge is built once per committed file. It joins on plain
+email equality and requires both inputs free of NULL emails; the join then
+reuses whatever hash partitioning on email its inputs carry.
 """
 
 from __future__ import annotations
@@ -138,8 +140,14 @@ def visitantes_merge(
     source: DataFrame,
     process_date: str | None = None,
 ) -> DataFrame:
-    """The concrete visitantes upsert (email-keyed, null-safe join), all
-    rules applied.
+    """The concrete visitantes upsert (email-keyed), all rules applied.
+
+    The join is plain equality on email, so neither input may hold a NULL
+    email (a NULL would match nothing and come out as its own row): source
+    rows passed email validation, and the snapshot holds only merged rows.
+    A null-safe join would be planned on rewritten keys
+    (``coalesce(email, '')``, ``isnull(email)``), which no input is
+    partitioned on, so both sides would shuffle again.
 
     ``process_date`` (ISO yyyy-mm-dd) pins "current" year/month for
     deterministic tests; defaults to the current date.
@@ -150,7 +158,7 @@ def visitantes_merge(
         merged = _merged_sql(f"DATE'{date.fromisoformat(process_date).isoformat()}'")
     t = target.selectExpr(*_TARGET_SQL)
     s = source.selectExpr(*_SOURCE_SQL)
-    return t.join(s, F.expr("t_email <=> s_email"), "full_outer").selectExpr(*merged)
+    return t.join(s, F.expr("t_email = s_email"), "full_outer").selectExpr(*merged)
 
 
 def scd2_apply(

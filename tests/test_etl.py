@@ -337,6 +337,77 @@ def test_upstream_writes_overlap(spark, report_dir, tmp_path, monkeypatch):
     ]
 
 
+def test_trail_is_written_beside_the_marker(spark, report_dir, tmp_path, monkeypatch):
+    """The trail flush and the bitacora marker run at once: the flush waits
+    for the marker to start, which it can only do in time if the two run
+    together. The flush is then slowed, and process_file still returns only
+    after it has ended, so the trail reads back at once."""
+    import threading
+    import time
+
+    marker_started = threading.Event()
+    real_log, real_bitacora = Warehouse.log_file_events, Warehouse.log_bitacora
+
+    def log_file_events(self, events):
+        if not marker_started.wait(30):
+            raise TimeoutError("the marker did not start while the trail was flushed")
+        time.sleep(1.0)
+        return real_log(self, events)
+
+    def log_bitacora(self, rows):
+        marker_started.set()
+        return real_bitacora(self, rows)
+
+    monkeypatch.setattr(Warehouse, "log_file_events", log_file_events)
+    monkeypatch.setattr(Warehouse, "log_bitacora", log_bitacora)
+    path = FX.make_mixed(report_dir)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    res = process_file(spark, wh, path, process_date="2026-03-28")
+    assert res.status == S.STATUS_OK_WITH_ERRORS
+    trail = [r["etapa"] for r in wh.file_log("report_mixed.txt").collect()]
+    assert trail == ["RECIBIDO", "LAYOUT", "TRANSFORMADO", "MERGE", "CARGADO"]
+    assert wh.processed_files() == {"report_mixed.txt"}
+
+
+def test_failing_trail_append_still_commits(spark, report_dir, tmp_path, monkeypatch):
+    """The trail is informational: a logs append that fails leaves the file
+    committed, with its marker and no trail."""
+
+    def log_file_events(self, events):
+        raise RuntimeError("injected logs failure")
+
+    monkeypatch.setattr(Warehouse, "log_file_events", log_file_events)
+    path = FX.make_allvalid(report_dir)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    res = process_file(spark, wh, path, process_date="2026-03-28")
+    assert (res.status, res.ok_count, res.err_count) == (S.STATUS_OK, 100, 0)
+    bit = [(r["nombreArchivo"], r["estatus"]) for r in wh.read("bitacora").collect()]
+    assert bit == [("report_allvalid.txt", S.STATUS_OK)]
+    assert wh.read("logs") is None
+
+
+def test_failing_marker_marks_the_file_failed(spark, report_dir, tmp_path, monkeypatch):
+    """A commit marker that fails leaves FALLO_SISTEMA in bitacora and a
+    FALLO row after the trail written beside it."""
+    real_bitacora = Warehouse.log_bitacora
+
+    def log_bitacora(self, rows):
+        if rows[0][3] != S.STATUS_SYSTEM_FAIL:
+            raise RuntimeError("injected marker failure")
+        return real_bitacora(self, rows)
+
+    monkeypatch.setattr(Warehouse, "log_bitacora", log_bitacora)
+    path = FX.make_mixed(report_dir)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    assert process_file(spark, wh, path, process_date="2026-03-28").status == S.STATUS_SYSTEM_FAIL
+    bit = [(r["nombreArchivo"], r["estatus"]) for r in wh.read("bitacora").collect()]
+    assert bit == [("report_mixed.txt", S.STATUS_SYSTEM_FAIL)]
+    trail = [(r["etapa"], r["mensaje"]) for r in wh.file_log("report_mixed.txt").collect()]
+    assert [e for e, _ in trail] == ["RECIBIDO", "LAYOUT", "TRANSFORMADO", "MERGE", "CARGADO", "FALLO"]
+    assert "injected marker failure" in trail[-1][1]
+    assert wh.processed_files() == set()
+
+
 def test_upstream_jobs_keep_the_callers_job_group(spark, report_dir, tmp_path, job_groups):
     """The appends' pool threads take the caller's local properties, so a
     stream query's job group (which stopping the query cancels) covers

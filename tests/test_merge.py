@@ -5,6 +5,7 @@ SURVEY D21/D22 rulings): matched same-month, matched new-month, matched
 new-year, matched older-incoming-last-visit, and not-matched insert.
 """
 
+import contextlib
 import datetime
 
 import pytest
@@ -189,6 +190,163 @@ def test_merge_writes_one_file_per_bucket(spark, tmp_path, target, source):
             files = [f for f in os.listdir(os.path.join(root, version, b)) if f.endswith(".parquet")]
             assert len(files) == 1, (version, b, files)
     assert wh.read_visitantes().count() == 205
+
+
+def _report_visitors(spark, dirpath, name, rows):
+    """The visitors aggregate of a report file of ``rows``, as the batch
+    driver builds it."""
+    from pipeline_etl_website_visits_spark.etl.pipeline import read_report
+    from pipeline_etl_website_visits_spark.etl.transform import transform_file
+
+    from tests import fixtures as FX
+
+    path = FX.write_csv(os.path.join(dirpath, name), FX.HEADER, rows)
+    return transform_file(read_report(spark, path), name)[1]
+
+
+def _valid_rows(lo, hi):
+    from tests import fixtures as FX
+
+    return [FX.valid_row(i) for i in range(lo, hi)]
+
+
+@pytest.fixture()
+def visitantes_writes(monkeypatch):
+    """The frames the visitantes publishes hand to the parquet writer, in
+    order."""
+    from pyspark.sql import DataFrameWriter
+
+    frames = []
+    real = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        if os.path.basename(path).startswith("visitantes_v"):
+            frames.append(self._df)
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    return frames
+
+
+def _exchanges_and_join(df):
+    """(line of the join, [(line, key, partitions)] of every Exchange) in
+    the physical plan of ``df``; a line above the join's is an ancestor."""
+    import re
+
+    lines = str(df._jdf.queryExecution().executedPlan().toString()).splitlines()
+    join = next(i for i, ln in enumerate(lines) if "Join" in ln)
+    exchanges = []
+    for i, ln in enumerate(lines):
+        if "Exchange" in ln:
+            m = re.search(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\)", ln)
+            exchanges.append((i, m.group(1), int(m.group(2))) if m else (i, ln, None))
+    return join, exchanges
+
+
+@contextlib.contextmanager
+def _session_conf(spark, conf: dict):
+    """Set runtime SQL confs for the block, then put the previous values
+    back."""
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def test_steady_merge_shuffles_each_input_once(spark, tmp_path, visitantes_writes):
+    """One shuffle per input serves both the join and the bucket layout: a
+    merge into an existing snapshot plans two Exchanges, the batch
+    aggregate's and the target's, both on email into the same partition
+    count, and none above the join (no shuffle on the bucket column)."""
+    wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=16)
+    with _session_conf(spark, {"spark.sql.shuffle.partitions": 4}):
+        wh.merge_visitantes(
+            _report_visitors(spark, str(tmp_path), "report_a.txt", _valid_rows(0, 100)),
+            process_date="2026-03-28", applied_key="a",
+        )
+        wh.merge_visitantes(
+            _report_visitors(spark, str(tmp_path), "report_b.txt", _valid_rows(50, 150)),
+            process_date="2026-03-28", applied_key="b",
+        )
+        join, exchanges = _exchanges_and_join(visitantes_writes[-1])
+    # 4: the largest divisor of 16 buckets within 4 shuffle partitions
+    assert [(key, n) for _, key, n in exchanges] == [("email", 4)] * 2, exchanges
+    assert all(line > join for line, _, _ in exchanges), exchanges
+    assert wh.read_visitantes().count() == 150
+
+
+@pytest.mark.parametrize("partitions", [4, 6, 32])
+def test_merge_layout_one_file_per_bucket_at_any_shuffle_partitions(spark, tmp_path, partitions):
+    """With AQE on, at shuffle partitions that do not divide the bucket
+    count (6) or exceed it (32), every bucket dir of every version still
+    holds one parquet file."""
+    conf = {"spark.sql.shuffle.partitions": partitions, "spark.sql.adaptive.enabled": "true"}
+    with _session_conf(spark, conf):
+        root = str(tmp_path / "wh")
+        wh = Warehouse(spark, root, n_buckets=16)
+        for name, (lo, hi) in [("report_a.txt", (0, 100)), ("report_b.txt", (50, 150))]:
+            visitors = _report_visitors(spark, str(tmp_path), name, _valid_rows(lo, hi))
+            wh.merge_visitantes(visitors, process_date="2026-03-28", applied_key=name)
+        for version in wh.visitantes_versions():
+            for b in _bucket_dirs(root, version):
+                files = [f for f in os.listdir(os.path.join(root, version, b)) if f.endswith(".parquet")]
+                assert len(files) == 1, (partitions, version, b, files)
+        out = {r["email"]: r["visitasTotales"] for r in wh.read_visitantes().collect()}
+    assert len(out) == 150
+    assert out["user49@example.com"] == 1 and out["user50@example.com"] == 2
+
+
+def test_one_email_merge_scans_only_its_bucket(spark, tmp_path, target, source, visitantes_writes):
+    """The merge's write reads, on the target side, only the dir of the
+    bucket its one email hashes to."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root, n_buckets=16)
+    wh.write_visitantes(target, applied_key="seed")
+    v0 = wh._current_visitantes_version()
+    assert len(_bucket_dirs(root, v0)) >= 2
+    one = source.filter(F.col("email") == "match-prev-year@example.com")
+    b = one.select(wh._bucket_col(16).alias("b")).first()["b"]
+    wh.merge_visitantes(one, process_date=PROCESS_DATE, applied_key="one")
+    scanned = {os.path.basename(os.path.dirname(f)) for f in visitantes_writes[-1].inputFiles()}
+    assert scanned == {f"bucket={b}"}
+    assert all(f"/{v0}/bucket={b}/" in f for f in visitantes_writes[-1].inputFiles())
+    out = {r["email"]: r["visitasTotales"] for r in wh.read_visitantes().collect()}
+    assert out["match-prev-year@example.com"] == 33 and len(out) == 4
+
+
+def test_merge_job_counts(spark, tmp_path, job_groups):
+    """Jobs per merge, told apart by job group, under the benchmark's
+    profile (AQE off, where a job is a plan, not a query stage): a first
+    load runs the write alone, a merge into a snapshot runs the
+    touched-bucket aggregate and the write. A first load of a batch with
+    no valid row publishes nothing and leaves no version dir."""
+    from tests import fixtures as FX
+
+    job_groups.mark("merge_visitantes")
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root, n_buckets=16)
+    invalid = [FX.valid_row(i, email="no-at-sign.com") for i in range(5)]
+    batches = [
+        _report_visitors(spark, str(tmp_path), "report_bad.txt", invalid),
+        _report_visitors(spark, str(tmp_path), "report_a.txt", _valid_rows(0, 100)),
+        _report_visitors(spark, str(tmp_path), "report_b.txt", _valid_rows(50, 150)),
+    ]
+    jobs = []
+    with _session_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        for key, visitors in zip(["bad", "a", "b"], batches):
+            j0 = job_groups.next_job()
+            wh.merge_visitantes(visitors, process_date="2026-03-28", applied_key=key)
+            jobs.append(job_groups.of(j0, job_groups.next_job()).count(job_groups.MARK))
+            if key == "bad":
+                assert wh.visitantes_versions() == []
+                assert not [d for d in os.listdir(root) if d.startswith("visitantes_v")]
+    assert jobs == [1, 1, 2]
+    assert wh.visitantes_applied() == {"a", "b"}
+    assert wh.read_visitantes().count() == 150
 
 
 def test_gc_keeps_referenced_versions(spark, tmp_path, target, source):
