@@ -6,9 +6,10 @@
 
 Batch mode mirrors the reference's daily run (process everything new in the
 input dir); --stream runs the Structured Streaming path with AvailableNow
-(same outcome, checkpoint-tracked); --compact TABLE [--cluster-by k1,k2]
-runs the warehouse maintenance job instead (crash-safe small-file
-compaction, optionally range-clustered for file skipping);
+(same outcome, checkpoint-tracked); --compact {estadisticas,errores}
+[--cluster-by k1,k2] runs the warehouse maintenance job instead (crash-safe
+compaction of a per-file partitioned table's small files, optionally
+range-clustered for file skipping);
 --forget EMAIL runs the GDPR erasure job.
 """
 
@@ -31,8 +32,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--compact",
         default=None,
-        metavar="TABLE",
-        help="run maintenance instead of the ETL: compact TABLE's small per-file partitions",
+        choices=("estadisticas", "errores"),
+        help="run maintenance instead of the ETL: compact the table's small per-file partitions",
     )
     ap.add_argument(
         "--cluster-by",

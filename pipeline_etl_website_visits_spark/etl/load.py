@@ -24,8 +24,14 @@ Control schemas (``BITACORA_SCHEMA``, ``LOGS_SCHEMA``):
   timestamp and the fecha (DDMMYY) partition column. The TRANSFORMADO row
   carries ``ok=<n> errores=<n>``, the same counts as the bitacora.
 
-Both are appended as JVM-local relations (:func:`_jvm_rows`): a one-row
-control write runs one job and no Python worker.
+Both are appended from the driver without a Spark job
+(:meth:`Warehouse._append_control`): a call's rows are encoded as one parquet
+file in driver memory (pyarrow, with the types and nullability of the schemas
+above, timestamps as UTC-adjusted microseconds) and written through the
+warehouse's Hadoop FS under a hidden name, then renamed into the table, so a
+reader sees all of a call's rows or none. One driver-clock instant per call,
+in ``spark.sql.session.timeZone``, stamps fechaProceso and the trail's fecha.
+Spark reads these files and its own (INT96 timestamps) as one table.
 
 Atomicity (K4): Spark has no cross-table transactions; the protocol is
 (1) per-file idempotent writes — estadisticas/errores use dynamic partition
@@ -41,8 +47,8 @@ unit runs all three at once (:meth:`Warehouse.write_upstream`, called by
 both drivers) and writes no control row until all three have ended; a merge
 that lands while an append fails is covered by (2), as the retry skips it.
 The logs trail is not an upstream write: it is informational, and the batch
-driver appends it beside the marker, at the same time; a crash between the
-two can leave a committed file without its trail.
+driver appends it right after the marker; a crash between the two can leave
+a committed file without its trail.
 At 100 TB the same layout holds with date partitioning on top (partition by
 fechaProceso/nombreArchivo) or Delta tables for real ACID.
 
@@ -57,9 +63,11 @@ manifest reference.
 
 from __future__ import annotations
 
+import datetime
 import functools
 import os
 import re
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 from types import SimpleNamespace
 from typing import NamedTuple
@@ -77,7 +85,7 @@ from pyspark.sql.types import (
 from pyspark.util import inheritable_thread_target
 
 from pipeline_etl_website_visits_spark.etl import schema as S
-from pipeline_etl_website_visits_spark.functions import sql_ident, sql_string
+from pipeline_etl_website_visits_spark.functions import sql_string
 
 BITACORA_SCHEMA = StructType(
     [
@@ -111,13 +119,10 @@ VISITANTES_SCHEMA = StructType(
 )
 
 
-# a logs row as written: LOGS_SCHEMA plus its two stamps
+# a logs row as its file holds it: LOGS_SCHEMA plus its fechaProceso stamp
+# (the fecha stamp is the file's partition dir)
 _LOGS_ROW_SCHEMA = StructType(
-    LOGS_SCHEMA.fields
-    + [
-        StructField("fechaProceso", TimestampType(), False),
-        StructField("fecha", StringType(), False),
-    ]
+    LOGS_SCHEMA.fields + [StructField("fechaProceso", TimestampType(), False)]
 )
 
 
@@ -128,47 +133,42 @@ _LOGS_ROW_SCHEMA = StructType(
 _NO_SUCCESS_MARKER = {"mapreduce.fileoutputcommitter.marksuccessfuljobs": "false"}
 
 
-class _Sql(str):
-    """SQL text placed in a control row as is, not as a string literal."""
+def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty DataFrame of ``schema``, as a local relation built in the
+    JVM: ``createDataFrame`` on a Python list plans an RDD scan whose task
+    starts a Python worker."""
+    jschema = spark._jsparkSession.parseDataType(schema.json())
+    jrows = spark._jvm.java.util.ArrayList()
+    return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)
 
 
-_NOW = _Sql("current_timestamp()")
-_TODAY_DDMMYY = _Sql("date_format(current_date(), 'ddMMyy')")
+def _parquet_bytes(schema: StructType, rows: list[tuple]) -> bytes:
+    """``rows`` (in ``schema`` order) encoded as one snappy parquet file.
+    Strings, longs and timestamps (aware datetimes) map to arrow string,
+    int64 and UTC microseconds. A non-null field is written ``required``,
+    and a None in one raises here, before anything is written."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-
-def _sql_value(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, _Sql):
-        return v
-    return str(v) if isinstance(v, int) else sql_string(v)
-
-
-def _jvm_rows(spark: SparkSession, schema: StructType, rows: list[tuple]) -> DataFrame:
-    """``rows`` (ints, strings, None or :class:`_Sql` text, in ``schema``
-    order) as a DataFrame built in the JVM from one SQL expression:
-    ``inline`` over an array of structs, each cast to ``schema``, on a
-    one-row range. ``createDataFrame`` on a Python list plans an RDD scan
-    whose task starts a Python worker, which dominated the cost of a one-row
-    control write.
-
-    The stamps (``current_timestamp()`` and the like) sit inside the array,
-    which the optimizer folds into one literal that generated code holds by
-    reference, so a repeat write compiles no new code. The per-struct cast
-    keeps ``schema``'s nullability (an array cast would make every field
-    nullable); with no rows the result is an empty local relation."""
-    if not rows:
-        jschema = spark._jsparkSession.parseDataType(schema.json())
-        jrows = spark._jvm.java.util.ArrayList()
-        return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)
-    fields = ", ".join(
-        f"{sql_ident(f.name)}: {f.dataType.simpleString()}{'' if f.nullable else ' NOT NULL'}"
-        for f in schema.fields
+    types = {
+        "string": pa.string(),
+        "bigint": pa.int64(),
+        "timestamp": pa.timestamp("us", tz="UTC"),
+    }
+    columns = dict(zip(schema.fieldNames(), map(list, zip(*rows))))
+    for f in schema.fields:
+        if not f.nullable and None in columns[f.name]:
+            raise ValueError(f"control row field {f.name!r} is NOT NULL, got None")
+        if f.dataType.simpleString() == "timestamp":
+            # pyarrow would take an aware datetime's wall clock as UTC
+            utc = datetime.timezone.utc
+            columns[f.name] = [v and v.astimezone(utc) for v in columns[f.name]]
+    arrow_schema = pa.schema(
+        [pa.field(f.name, types[f.dataType.simpleString()], f.nullable) for f in schema.fields]
     )
-    structs = ", ".join(
-        f"CAST(struct({', '.join(map(_sql_value, row))}) AS STRUCT<{fields}>)" for row in rows
-    )
-    return spark.range(0, 1, 1, 1).selectExpr(f"inline(array({structs}))")
+    sink = pa.BufferOutputStream()
+    pq.write_table(pa.table(columns, schema=arrow_schema), sink, compression="snappy")
+    return sink.getvalue().to_pybytes()
 
 
 def _bucket_sql(n_buckets: int) -> str:
@@ -294,6 +294,8 @@ class Warehouse:
             escapePathName=jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName,
             ParquetFileReader=jvm.org.apache.parquet.hadoop.ParquetFileReader,
             HadoopInputFile=jvm.org.apache.parquet.hadoop.util.HadoopInputFile,
+            getZoneId=jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId,
+            Instant=jvm.java.time.Instant,
         )
 
     def _fs(self, p: str):
@@ -307,10 +309,11 @@ class Warehouse:
 
     def _has_data(self, table: str) -> bool:
         """True when the table dir holds any partition dir or data file
-        (ignores commit markers like _SUCCESS)."""
+        (ignores the names Spark's readers skip: commit markers like
+        _SUCCESS, checksum sidecars and unpublished control files)."""
         fs, hpath, _ = self._fs(self.path(table))
         for st in fs.listStatus(hpath):
-            if not str(st.getPath().getName()).startswith("_"):
+            if not str(st.getPath().getName()).startswith(("_", ".")):
                 return True
         return False
 
@@ -515,7 +518,13 @@ class Warehouse:
     # -- small-file compaction (SURVEY §4.3: one parquet file per micro-batch
     #    otherwise) ----------------------------------------------------------
     def _live_partitions(self, table: str) -> set[str]:
-        """nombreArchivo values present as live partition dirs (one FS list)."""
+        """nombreArchivo values present as live partition dirs (one FS list).
+
+        Raises ValueError when the live region holds anything else that
+        Spark reads (``bitacora``'s flat files, ``logs``' fecha dirs): such
+        a table has no per-file partitions for :meth:`compact` to absorb and
+        delete, so compacting it would leave every row live and add a
+        compacted copy of each."""
         fs, hpath, _ = self._fs(self.path(table))
         if not fs.exists(hpath):
             return set()
@@ -524,6 +533,11 @@ class Warehouse:
             name = str(st.getPath().getName())
             if name.startswith("nombreArchivo="):
                 out.add(name.split("=", 1)[1])
+            elif not name.startswith(("_", ".")):
+                raise ValueError(
+                    f"table {table!r} is not partitioned by nombreArchivo (holds {name!r}); "
+                    "only per-file partitioned tables can be compacted"
+                )
         return out
 
     def _current_compact_version(self, table: str) -> str | None:
@@ -553,7 +567,9 @@ class Warehouse:
         crash window always resolve to one copy. Idempotent: a re-run with
         nothing new to absorb is a no-op.
 
-        Returns {"version", "absorbed", "files"}.
+        Returns {"version", "absorbed", "files"}. Raises ValueError, having
+        written nothing, for a table not partitioned by nombreArchivo
+        (``bitacora``, ``logs``; see :meth:`_live_partitions`).
 
         Holds the table's writer lease for the whole
         read-pointer→rewrite→flip→GC sequence: two concurrent compactions
@@ -695,10 +711,14 @@ class Warehouse:
         return [ln.strip() for ln in re.split(r"\r\n?|\n", text) if ln.strip()]
 
     def _write_small_text(self, p: str, content: str) -> None:
+        self._write_small_file(p, content.encode("utf-8"))
+
+    def _write_small_file(self, p: str, data: bytes) -> None:
+        """Create (or overwrite) ``p`` holding ``data``, in one JVM write."""
         fs, hpath, _ = self._fs(p)
         out = fs.create(hpath, True)
         try:
-            out.write(bytearray(content.encode("utf-8")))
+            out.write(bytearray(data))
         finally:
             out.close()
 
@@ -768,7 +788,7 @@ class Warehouse:
         if buckets is not None:
             refs = {b: v for b, v in refs.items() if b in buckets}
         if not refs:
-            return _jvm_rows(self.spark, VISITANTES_SCHEMA, [])
+            return _empty(self.spark, VISITANTES_SCHEMA)
         paths = [os.path.join(self.path(ver), f"bucket={b}") for b, ver in sorted(refs.items())]
         return self.spark.read.schema(VISITANTES_SCHEMA).parquet(*paths)
 
@@ -805,7 +825,8 @@ class Warehouse:
         if snap.current is None:
             return {}
         b = (
-            _jvm_rows(self.spark, StructType([VISITANTES_SCHEMA["email"]]), [(email,)])
+            self.spark.range(1)
+            .selectExpr(f"{sql_string(email)} AS email")
             .selectExpr(f"{_bucket_sql(snap.n_buckets)} AS b")
             .collect()[0]["b"]
         )
@@ -841,7 +862,7 @@ class Warehouse:
                 f"available: {list(reversed(versions))}"
             )
         if version is None:
-            return _jvm_rows(self.spark, VISITANTES_SCHEMA, [])
+            return _empty(self.spark, VISITANTES_SCHEMA)
         return self._read_refs(self._visitantes_manifest(version)[1], buckets)
 
     def visitantes_applied(self) -> set[str]:
@@ -881,7 +902,7 @@ class Warehouse:
         versions = self.visitantes_versions()
         cur = self.read_visitantes()
         if len(versions) < 2:
-            prev = _jvm_rows(self.spark, VISITANTES_SCHEMA, [])
+            prev = _empty(self.spark, VISITANTES_SCHEMA)
         else:
             prev = self.read_visitantes(version=versions[0])
         cols = [f.name for f in VISITANTES_SCHEMA.fields if f.name != "email"]
@@ -1094,27 +1115,18 @@ class Warehouse:
         """Append (filename, stage, level, message) rows for one file's run.
 
         Buffered by the caller and written ONCE per file (one small parquet
-        append, same cost profile as the bitacora marker — not one write per
-        event). Partitioned by fecha (DDMMYY) mirroring the reference's
-        per-day log directories.
+        file, same cost profile as the bitacora marker — not one write per
+        event). Partitioned by fecha (DDMMYY, in the session time zone)
+        mirroring the reference's per-day log directories.
         """
         if not events:
             return
+        now = self._now()
         # explicit per-flush sequence: every row of a flush shares one
-        # current_timestamp(), so the timestamp alone cannot order stages
-        import time
-
-        base_seq = int(time.time() * 1000) * 1000  # flush epoch-ms, 1000 slots
-        rows = _jvm_rows(
-            self.spark,
-            _LOGS_ROW_SCHEMA,
-            [
-                (f, e, lv, m, base_seq + i, _NOW, _TODAY_DDMMYY)
-                for i, (f, e, lv, m) in enumerate(events)
-            ],
-        )
-        out = rows.write.mode("append").options(**_NO_SUCCESS_MARKER)
-        out.partitionBy("fecha").parquet(self.path("logs"))
+        # fechaProceso, so the timestamp alone cannot order stages
+        base_seq = int(now.timestamp() * 1000) * 1000  # flush epoch-ms, 1000 slots
+        rows = [(f, e, lv, m, base_seq + i, now) for i, (f, e, lv, m) in enumerate(events)]
+        self._append_control("logs", _LOGS_ROW_SCHEMA, rows, partition=f"fecha={now:%d%m%y}")
 
     def file_log(self, filename: str) -> DataFrame | None:
         """The per-file trail (all stages, ordered) — the O6 debugging view."""
@@ -1126,12 +1138,41 @@ class Warehouse:
     # -- bitacora commit marker (K3, written last) ---------------------------
     def log_bitacora(self, rows: list[tuple[str, int, int, str]]) -> None:
         """Append (filename, ok_count, err_count, status) control rows as ONE
-        append, so a micro-batch's markers land all together or not at all."""
+        file, so a micro-batch's markers land all together or not at all."""
         if not rows:
             return
-        stamped = [(*r, _NOW) for r in rows]
-        rows = _jvm_rows(self.spark, BITACORA_SCHEMA, stamped)
-        rows.write.mode("append").options(**_NO_SUCCESS_MARKER).parquet(self.path("bitacora"))
+        now = self._now()
+        self._append_control("bitacora", BITACORA_SCHEMA, [(*r, now) for r in rows])
+
+    def _now(self) -> datetime.datetime:
+        """The driver clock's instant at its offset in
+        ``spark.sql.session.timeZone``: the stamp ``current_timestamp()`` and
+        ``current_date()`` would give. Spark resolves the zone, so every form
+        the conf takes (region, offset, alias) works."""
+        j = self._jclasses
+        now = datetime.datetime.now(datetime.timezone.utc)
+        zone = j.getZoneId(self.spark.conf.get("spark.sql.session.timeZone"))
+        instant = j.Instant.ofEpochSecond(int(now.timestamp()))
+        offset = zone.getRules().getOffset(instant).getTotalSeconds()
+        return now.astimezone(datetime.timezone(datetime.timedelta(seconds=offset)))
+
+    def _append_control(
+        self, table: str, schema: StructType, rows: list[tuple], partition: str = ""
+    ) -> None:
+        """Append ``rows`` to ``table`` (into its ``partition`` dir, if
+        given) as one new parquet part file, without a Spark job: encoded in
+        driver memory, written under a hidden name in the table dir, which
+        Spark's readers and :meth:`_has_data` skip, then renamed into view.
+        A failure before the rename leaves no visible file."""
+        data = _parquet_bytes(schema, rows)
+        name = f"part-{uuid.uuid4()}.snappy.parquet"
+        tmp = os.path.join(self.path(table), f".{name}.tmp")
+        self._write_small_file(tmp, data)
+        fs, htmp, _ = self._fs(tmp)
+        dst = self._jclasses.Path(os.path.join(self.path(table), partition, name))
+        fs.mkdirs(dst.getParent())
+        if not fs.rename(htmp, dst):
+            raise OSError(f"could not rename control file {tmp} to {dst}")
 
     def processed_files(self) -> set[str]:
         """Filenames with a completion marker (replaces the reference's
@@ -1140,7 +1181,7 @@ class Warehouse:
         if b is None:
             return set()
         done = (
-            b.filter(F.col("estatus").isin(S.STATUS_OK, S.STATUS_OK_WITH_ERRORS, S.STATUS_LAYOUT_FAIL))
+            b.filter(F.col("estatus").isin(*S.STATUS_DONE))
             .select("nombreArchivo")
             .distinct()
             .collect()

@@ -9,15 +9,15 @@ continues. Already-processed files are skipped via the bitacora commit marker
 
 Scale notes: the per-file loop is about *file-granular semantics* (each file
 is its own commit unit, like the reference). A file costs the Spark jobs of
-its writes only — the two appends, the merge and the control rows; the
-header peek, the schema and the ok/error counts add none — so at small files
-that fixed per-job cost dominates. The two appends and the merge run at
-once (:meth:`Warehouse.write_upstream`), so a file pays the slowest of the
-three rather than their sum; the control rows follow them, the trail and
-the bitacora marker side by side. With millions of small files you would
-instead group valid files by header signature and process each group as ONE
-job with ``_metadata.file_path`` lineage — ``transform_group`` implements
-that path.
+its data writes only — the two appends and the merge; the header peek, the
+schema, the ok/error counts and the control rows (the bitacora marker and
+the trail, each one parquet file the driver writes) add none — so at small
+files that fixed per-job cost dominates. The two appends and the merge run
+at once (:meth:`Warehouse.write_upstream`), so a file pays the slowest of
+the three rather than their sum; the marker, then the trail, follow them.
+With millions of small files you would instead group valid files by header
+signature and process each group as ONE job with ``_metadata.file_path``
+lineage — ``transform_group`` implements that path.
 """
 
 from __future__ import annotations
@@ -25,12 +25,10 @@ from __future__ import annotations
 import csv
 import io
 import os
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
-from pyspark.util import inheritable_thread_target
 
 from pipeline_etl_website_visits_spark.etl import schema as S
 from pipeline_etl_website_visits_spark.etl import transform as T
@@ -126,9 +124,9 @@ def process_file(
 ) -> FileResult:
     """Full per-file ETL: validate layout → transform → load → bitacora.
 
-    Spark jobs run only inside the :class:`Warehouse` writes: the ok/error
-    counts for the trail and the bitacora row come back from the
-    estadisticas/errores appends (:meth:`Warehouse.append_rows`), and nothing
+    Spark jobs run only inside the estadisticas/errores appends and the
+    visitantes merge: the ok/error counts for the trail and the bitacora row
+    come back from the appends (:meth:`Warehouse.append_rows`), and nothing
     is cached. (Not a :class:`pyspark.sql.Observation`: on Spark 4.1 its
     first use leaves the session unserializable, which breaks later ML
     closures that capture the session.)
@@ -141,10 +139,10 @@ def process_file(
     O6: every stage appends to a per-file event buffer, flushed as ONE
     parquet append at the end of the file's run (success or failure) — the
     structured replacement for the reference's logs/DDMMYY/<file>.log. On
-    success the trail is written beside the marker, at the same time; a
-    crash between the two can leave a committed file without its trail, the
-    same loss as a failed trail append. ``process_file`` returns only after
-    both have ended.
+    success the trail is written right after the marker, so it is readable
+    when ``process_file`` returns; a crash between the two can leave a
+    committed file without its trail, the same loss as a failed trail
+    append. Neither control write runs a Spark job.
     """
     filename = os.path.basename(filepath)
     trail: list[tuple[str, str, str, str]] = [(filename, "RECIBIDO", "INFO", filepath)]
@@ -180,21 +178,17 @@ def process_file(
         )
 
         status = S.STATUS_OK_WITH_ERRORS if err_count > 0 else S.STATUS_OK  # D9 fixed
-        # the trail is flushed on a pool thread while the bitacora commit
-        # marker is written: the marker stays the last upstream write (K4),
-        # and the flush swallows its own failures, so a failing logs append
-        # cannot mark a committed file FALLO. Leaving the pool waits for the
-        # flush, on the failure path too.
         trail.append((filename, "CARGADO", "INFO", status))
-        with ThreadPoolExecutor(1) as pool:
-            pool.submit(inheritable_thread_target(spark)(_flush_trail), warehouse, trail)
-            trail = []  # flushed — the except path appends only its own suffix
-            warehouse.log_bitacora([(filename, ok_count, err_count, status)])  # commit marker
+        # the commit marker stays the last upstream write (K4); the trail
+        # follows it, and the flush swallows its own failures, so a failing
+        # logs append cannot mark a committed file FALLO
+        warehouse.log_bitacora([(filename, ok_count, err_count, status)])
+        _flush_trail(warehouse, trail)
         return FileResult(filename, status, ok_count, err_count, extra_columns=extra)
     except Exception as e:  # noqa: BLE001 — per-file isolation (O4)
         warehouse.log_bitacora([(filename, 0, 0, S.STATUS_SYSTEM_FAIL)])
         trail.append((filename, "FALLO", "ERROR", f"{type(e).__name__}: {e}"))
-        _flush_trail(warehouse, trail)  # unflushed prefix + the FALLO row
+        _flush_trail(warehouse, trail)
         return FileResult(filename, S.STATUS_SYSTEM_FAIL)
 
 
@@ -238,6 +232,8 @@ def process_directory(
         from pipeline_etl_website_visits_spark.etl.backup import requeue_quarantined
 
         forced = set(requeue_quarantined(input_dir, quarantine_dir, today=today)["requeued"])
+    # the markers are read once: without reprocess, the set after the run is
+    # this one plus the files the run marked
     done = set() if reprocess else warehouse.processed_files()
     results = []
     for filepath in list_report_files(spark, input_dir):
@@ -261,7 +257,11 @@ def process_directory(
     if backup_dir is not None:
         from pipeline_etl_website_visits_spark.etl.backup import archive_processed
 
-        archive_processed(input_dir, backup_dir, warehouse.processed_files())
+        # a reprocess read no markers, and a file whose reprocess failed
+        # keeps its earlier completion marker: read them now
+        marked = {r.filename for r in results if r.status in S.STATUS_DONE}
+        committed = warehouse.processed_files() if reprocess else done | marked
+        archive_processed(input_dir, backup_dir, committed)
     return results
 
 

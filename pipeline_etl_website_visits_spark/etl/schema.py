@@ -84,3 +84,5 @@ STATUS_OK = "Completado"
 STATUS_OK_WITH_ERRORS = "Completado con errores"
 STATUS_LAYOUT_FAIL = "FALLO_LAYOUT"
 STATUS_SYSTEM_FAIL = "FALLO_SISTEMA"
+# the completion markers: a file with one of these is not processed again
+STATUS_DONE = (STATUS_OK, STATUS_OK_WITH_ERRORS, STATUS_LAYOUT_FAIL)

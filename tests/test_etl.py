@@ -245,47 +245,199 @@ def test_per_file_log_trail(spark, report_dir, tmp_path, monkeypatch):
     assert all(len(r["fecha"]) == 6 for r in crashed)
 
 
-def test_control_rows_are_jvm_local(spark, tmp_path, monkeypatch):
-    """The trail and bitacora appends (and the empty-snapshot frame) are
-    planned without an RDD scan of Python rows, so no Python worker runs
-    for a one-row control write."""
-    from pyspark.sql import DataFrameWriter
-
-    written = []
-    real_parquet = DataFrameWriter.parquet
-
-    def capture(self, path, *args, **kwargs):
-        written.append((os.path.basename(path), self._df))
-        return real_parquet(self, path, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.log_file_events([("f.txt", "RECIBIDO", "INFO", "x"), ("f.txt", "CARGADO", "INFO", "y")])
+def _control_rows(wh):
+    wh.log_file_events([("f.txt", "RECIBIDO", "INFO", "x"), ("f.txt", "CARGADO", "INFO", None)])
     wh.log_bitacora([("f.txt", 3, 1, S.STATUS_OK_WITH_ERRORS), ("g.txt", 0, 0, S.STATUS_LAYOUT_FAIL)])
-    assert [name for name, _ in written] == ["logs", "bitacora"]
-    frames = [df for _, df in written] + [wh.read_visitantes()]
-    for df in frames:
-        qe = df._jdf.queryExecution()
-        plan = qe.optimizedPlan().toString() + qe.executedPlan().toString()
-        for python_scan in ("ExistingRDD", "LogicalRDD", "PythonRDD"):
-            assert python_scan not in plan, plan
+
+
+def _visible(table_dir):
+    """The names in ``table_dir`` (recursively) that Spark's readers see."""
+    return sorted(
+        os.path.relpath(os.path.join(d, f), table_dir)
+        for d, _, files in os.walk(table_dir)
+        for f in files
+        if not f.startswith(("_", "."))
+    )
+
+
+def test_control_writes_run_no_spark_job(spark, tmp_path, job_groups):
+    """The trail and bitacora appends schedule no Spark job, so no task and
+    no Python worker runs for them; the empty-snapshot frame is planned
+    without an RDD scan of Python rows. Each call adds one file."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    j0 = job_groups.next_job()
+    _control_rows(wh)
+    assert job_groups.next_job() == j0
+    qe = wh.read_visitantes()._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+    for python_scan in ("ExistingRDD", "LogicalRDD", "PythonRDD"):
+        assert python_scan not in plan, plan
+    assert len(_visible(wh.path("bitacora"))) == 1
+    assert len(_visible(wh.path("logs"))) == 1
 
     bit = {r["nombreArchivo"]: r for r in wh.read("bitacora").collect()}
     assert (bit["f.txt"]["registrosExitosos"], bit["f.txt"]["registrosFallidos"]) == (3, 1)
     assert bit["g.txt"]["estatus"] == S.STATUS_LAYOUT_FAIL
-    assert bit["g.txt"]["fechaProceso"] is not None
+    assert bit["g.txt"]["fechaProceso"] == bit["f.txt"]["fechaProceso"]  # one stamp per call
     trail = [(r["etapa"], r["mensaje"]) for r in wh.file_log("f.txt").collect()]
-    assert trail == [("RECIBIDO", "x"), ("CARGADO", "y")]
+    assert trail == [("RECIBIDO", "x"), ("CARGADO", None)]
     assert wh.read_visitantes().count() == 0
+
+
+def test_control_row_types(spark, tmp_path):
+    """The logs and bitacora files carry the declared types and nullability,
+    stamps included (non-null fields are ``required`` in the footers), and
+    read back through ``Warehouse.read`` with the declared types."""
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    _control_rows(wh)
+
+    def footer(table):
+        [name] = _visible(wh.path(table))
+        schema = pq.read_schema(os.path.join(wh.path(table), name))
+        return [(f.name, str(f.type), f.nullable) for f in schema]
+
+    stamp = "timestamp[us, tz=UTC]"
+    assert _visible(wh.path("logs"))[0].startswith("fecha=")
+    assert footer("logs") == [
+        ("nombreArchivo", "string", False),
+        ("etapa", "string", False),
+        ("nivel", "string", False),
+        ("mensaje", "string", True),
+        ("seq", "int64", False),
+        ("fechaProceso", stamp, False),
+    ]
+    assert footer("bitacora") == [
+        ("nombreArchivo", "string", False),
+        ("registrosExitosos", "int64", True),
+        ("registrosFallidos", "int64", True),
+        ("estatus", "string", False),
+        ("fechaProceso", stamp, False),
+    ]
+
+    def types(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    assert types(wh.read("logs")) == [
+        ("nombreArchivo", "string"), ("etapa", "string"), ("nivel", "string"),
+        ("mensaje", "string"), ("seq", "bigint"), ("fechaProceso", "timestamp"),
+        ("fecha", "string"),
+    ]
+    assert types(wh.read("bitacora")) == [
+        ("nombreArchivo", "string"), ("registrosExitosos", "bigint"),
+        ("registrosFallidos", "bigint"), ("estatus", "string"), ("fechaProceso", "timestamp"),
+    ]
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in wh.read_visitantes().schema] == [
+        (f.name, f.dataType.simpleString(), f.nullable) for f in VISITANTES_SCHEMA.fields
+    ]
+
+
+def test_control_tables_mix_spark_and_driver_files(spark, tmp_path):
+    """An upgraded warehouse holds Spark-written control files (INT96
+    stamps) beside driver-written ones: both read back as one table with
+    the declared types, and the markers of both count."""
+    from pipeline_etl_website_visits_spark.etl.load import BITACORA_SCHEMA, LOGS_SCHEMA
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    stamped = "current_timestamp() AS fechaProceso"
+    spark.createDataFrame([("old.txt", 5, 0, S.STATUS_OK)], BITACORA_SCHEMA[:4]).selectExpr(
+        "*", stamped
+    ).write.mode("append").parquet(wh.path("bitacora"))
+    spark.createDataFrame([("old.txt", "RECIBIDO", "INFO", "o", 1)], LOGS_SCHEMA).selectExpr(
+        "*", stamped, "date_format(current_date(), 'ddMMyy') AS fecha"
+    ).write.mode("append").partitionBy("fecha").parquet(wh.path("logs"))
+    assert spark.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
+    _control_rows(wh)
+
+    bit = wh.read("bitacora")
+    assert [f.dataType.simpleString() for f in bit.schema.fields] == [
+        "string", "bigint", "bigint", "string", "timestamp"
+    ]
+    got = {r["nombreArchivo"]: (r["registrosExitosos"], r["estatus"]) for r in bit.collect()}
+    assert got == {
+        "old.txt": (5, S.STATUS_OK),
+        "f.txt": (3, S.STATUS_OK_WITH_ERRORS),
+        "g.txt": (0, S.STATUS_LAYOUT_FAIL),
+    }
+    assert all(r["fechaProceso"] is not None for r in bit.collect())
+    assert wh.processed_files() == {"old.txt", "f.txt", "g.txt"}
+    logs = wh.read("logs")
+    assert logs.schema["fechaProceso"].dataType.simpleString() == "timestamp"
+    assert logs.schema["seq"].dataType.simpleString() == "bigint"
+    assert [r["etapa"] for r in wh.file_log("old.txt").collect()] == ["RECIBIDO"]
+    assert [r["etapa"] for r in wh.file_log("f.txt").collect()] == ["RECIBIDO", "CARGADO"]
+
+
+def test_control_write_failing_before_rename_leaves_no_visible_file(spark, tmp_path, monkeypatch):
+    """A control write that fails after its file is written and before the
+    rename leaves only a hidden file: readers see no row of it."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    real_write = Warehouse._write_small_file
+
+    def write_then_fail(self, p, data):
+        real_write(self, p, data)
+        raise OSError("injected failure before the rename")
+
+    monkeypatch.setattr(Warehouse, "_write_small_file", write_then_fail)
+    with pytest.raises(OSError, match="before the rename"):
+        wh.log_bitacora([("f.txt", 3, 1, S.STATUS_OK_WITH_ERRORS)])
+    with pytest.raises(OSError, match="before the rename"):
+        wh.log_file_events([("f.txt", "RECIBIDO", "INFO", "x")])
+    assert os.listdir(wh.path("bitacora"))  # the hidden file is there
+    assert _visible(wh.path("bitacora")) == [] and _visible(wh.path("logs")) == []
+    assert wh.read("bitacora") is None and wh.read("logs") is None
+    assert wh.processed_files() == set()
+
+
+def test_null_in_non_null_control_field_raises_before_writing(spark, tmp_path):
+    """A None in a field the schema declares NOT NULL raises before any file
+    is written; a None in a nullable field is written as NULL."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    with pytest.raises(ValueError, match="estatus"):
+        wh.log_bitacora([("f.txt", 3, 1, S.STATUS_OK), ("g.txt", 0, 0, None)])
+    with pytest.raises(ValueError, match="etapa"):
+        wh.log_file_events([("f.txt", None, "INFO", "x")])
+    assert not os.path.exists(wh.path("bitacora")) and not os.path.exists(wh.path("logs"))
+    wh.log_bitacora([("f.txt", None, None, S.STATUS_SYSTEM_FAIL)])
+    r = wh.read("bitacora").first()
+    assert (r["registrosExitosos"], r["registrosFallidos"]) == (None, None)
+
+
+@pytest.mark.parametrize("tz", ["Pacific/Kiritimati", "-11:00"])
+def test_trail_fecha_is_the_session_time_zone_date(spark, tmp_path, tz):
+    """The trail's fecha is Spark's ``date_format(current_date(), 'ddMMyy')``
+    under a non-UTC session time zone, given as a region or as an offset
+    (UTC+14 and UTC-11: one of the two is a different date from UTC at any
+    hour), and fechaProceso reads back as the current instant."""
+    import time
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        today = "date_format(current_date(), 'ddMMyy')"
+        before = spark.sql(f"SELECT {today}").first()[0]
+        wh.log_file_events([("f.txt", "RECIBIDO", "INFO", "x")])
+        after = spark.sql(f"SELECT {today}").first()[0]
+        row = wh.file_log("f.txt").selectExpr(
+            "fecha", "date_format(fechaProceso, 'ddMMyy') AS stamped", "unix_micros(fechaProceso) AS us"
+        ).first()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert row["fecha"] in (before, after)
+    assert row["stamped"] == row["fecha"]
+    assert abs(row["us"] / 1e6 - time.time()) < 60
 
 
 def test_process_file_runs_jobs_only_in_warehouse_writes(spark, report_dir, tmp_path, job_groups):
     """process_file itself schedules no Spark job (no schema inference, no
-    count()) and caches nothing: every job of a file runs inside a
-    Warehouse call, and the counts come back from the appends. Jobs are
-    told apart by job group, because the upstream writes overlap."""
-    job_groups.mark("append_rows", "merge_visitantes", "visitantes_applied",
-                    "log_bitacora", "log_file_events")
+    count()) and caches nothing: every job of a file runs inside the
+    estadisticas/errores appends or the visitantes merge, and the counts
+    come back from the appends. The applied-keys lookup and the control
+    writes run none. Jobs are told apart by job group, because the upstream
+    writes overlap."""
+    job_groups.mark("append_rows", "merge_visitantes")
     path = FX.make_mixed(report_dir)
     wh = Warehouse(spark, str(tmp_path / "wh"))
     spark.catalog.clearCache()
@@ -337,25 +489,21 @@ def test_upstream_writes_overlap(spark, report_dir, tmp_path, monkeypatch):
     ]
 
 
-def test_trail_is_written_beside_the_marker(spark, report_dir, tmp_path, monkeypatch):
-    """The trail flush and the bitacora marker run at once: the flush waits
-    for the marker to start, which it can only do in time if the two run
-    together. The flush is then slowed, and process_file still returns only
-    after it has ended, so the trail reads back at once."""
+def test_trail_is_written_after_the_marker(spark, report_dir, tmp_path, monkeypatch):
+    """The bitacora marker is written first and the trail right after it,
+    both on the calling thread, and the trail reads back as soon as
+    process_file returns."""
     import threading
-    import time
 
-    marker_started = threading.Event()
+    calls = []
     real_log, real_bitacora = Warehouse.log_file_events, Warehouse.log_bitacora
 
     def log_file_events(self, events):
-        if not marker_started.wait(30):
-            raise TimeoutError("the marker did not start while the trail was flushed")
-        time.sleep(1.0)
+        calls.append(("trail", threading.get_ident()))
         return real_log(self, events)
 
     def log_bitacora(self, rows):
-        marker_started.set()
+        calls.append(("marker", threading.get_ident()))
         return real_bitacora(self, rows)
 
     monkeypatch.setattr(Warehouse, "log_file_events", log_file_events)
@@ -364,6 +512,8 @@ def test_trail_is_written_beside_the_marker(spark, report_dir, tmp_path, monkeyp
     wh = Warehouse(spark, str(tmp_path / "wh"))
     res = process_file(spark, wh, path, process_date="2026-03-28")
     assert res.status == S.STATUS_OK_WITH_ERRORS
+    me = threading.get_ident()
+    assert calls == [("marker", me), ("trail", me)]
     trail = [r["etapa"] for r in wh.file_log("report_mixed.txt").collect()]
     assert trail == ["RECIBIDO", "LAYOUT", "TRANSFORMADO", "MERGE", "CARGADO"]
     assert wh.processed_files() == {"report_mixed.txt"}
@@ -388,7 +538,7 @@ def test_failing_trail_append_still_commits(spark, report_dir, tmp_path, monkeyp
 
 def test_failing_marker_marks_the_file_failed(spark, report_dir, tmp_path, monkeypatch):
     """A commit marker that fails leaves FALLO_SISTEMA in bitacora and a
-    FALLO row after the trail written beside it."""
+    trail that ends in a FALLO row."""
     real_bitacora = Warehouse.log_bitacora
 
     def log_bitacora(self, rows):
@@ -593,48 +743,6 @@ def test_manifest_read_is_one_jvm_call(spark, tmp_path, py4j_calls):
     n_long, n_lines_long = calls(long_)
     assert (n_lines_short, n_lines_long) == (1, 1000)
     assert n_long == n_short
-
-
-def test_control_row_schemas(spark, tmp_path, monkeypatch):
-    """The logs and bitacora rows are written with the declared types and
-    nullability, stamps included."""
-    from pyspark.sql import DataFrameWriter
-
-    written = {}
-    real_parquet = DataFrameWriter.parquet
-
-    def capture(self, path, *args, **kwargs):
-        written[os.path.basename(path)] = self._df.schema
-        return real_parquet(self, path, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.log_file_events([("f.txt", "RECIBIDO", "INFO", None)])
-    wh.log_bitacora([("f.txt", 3, 1, S.STATUS_OK_WITH_ERRORS)])
-
-    def shape(schema):
-        return [(f.name, f.dataType.simpleString(), f.nullable) for f in schema.fields]
-
-    assert shape(written["logs"]) == [
-        ("nombreArchivo", "string", False),
-        ("etapa", "string", False),
-        ("nivel", "string", False),
-        ("mensaje", "string", True),
-        ("seq", "bigint", False),
-        ("fechaProceso", "timestamp", False),
-        ("fecha", "string", False),
-    ]
-    assert shape(written["bitacora"]) == [
-        ("nombreArchivo", "string", False),
-        ("registrosExitosos", "bigint", True),
-        ("registrosFallidos", "bigint", True),
-        ("estatus", "string", False),
-        ("fechaProceso", "timestamp", False),
-    ]
-    assert shape(wh.read_visitantes().schema) == [
-        (f.name, f.dataType.simpleString(), f.nullable) for f in VISITANTES_SCHEMA.fields
-    ]
-    assert wh.file_log("f.txt").first()["mensaje"] is None
 
 
 ADVERSARIAL_FILE = "report_d'arc.txt"

@@ -238,6 +238,52 @@ def test_process_directory_backup_flag(spark, tmp_path):
         assert zf.namelist() == ["report_allvalid.txt"]
 
 
+def test_process_directory_reads_the_markers_once(spark, tmp_path, monkeypatch):
+    """A backup run reads bitacora once: the files it archives are the
+    markers read at its start plus the files it marked itself. A file
+    committed by an earlier run, one committed now and one marked
+    FALLO_LAYOUT are archived; one that failed is not."""
+    import pipeline_etl_website_visits_spark.etl.pipeline as P
+
+    rep = tmp_path / "in"
+    rep.mkdir()
+    wh_root = str(tmp_path / "wh")
+    FX.make_allvalid(str(rep), name="report_earlier.txt", n=5)
+    process_directory(spark, str(rep), wh_root, process_date="2026-03-28")
+    FX.make_allvalid(str(rep), n=5)
+    FX.make_badlayout(str(rep))
+    FX.make_mixed(str(rep))
+
+    reads = []
+    real_processed, real_transform = Warehouse.processed_files, P.T.transform_file
+
+    def processed_files(self):
+        reads.append(1)
+        return real_processed(self)
+
+    def exploding(raw, filename):
+        if filename == "report_mixed.txt":
+            raise RuntimeError("boom in transform")
+        return real_transform(raw, filename)
+
+    monkeypatch.setattr(Warehouse, "processed_files", processed_files)
+    monkeypatch.setattr(P.T, "transform_file", exploding)
+    bkd = str(tmp_path / "bk")
+    res = process_directory(spark, str(rep), wh_root, process_date="2026-03-28", backup_dir=bkd)
+    assert len(reads) == 1
+    assert {r.filename: r.status for r in res} == {
+        "report_allvalid.txt": S.STATUS_OK,
+        "report_badlayout.txt": S.STATUS_LAYOUT_FAIL,
+        "report_mixed.txt": S.STATUS_SYSTEM_FAIL,
+    }
+    archived = ["report_allvalid.txt", "report_badlayout.txt", "report_earlier.txt"]
+    assert sorted(real_processed(Warehouse(spark, wh_root))) == archived
+    [zip_name] = [f for f in os.listdir(bkd) if f.endswith(".zip")]
+    with zipfile.ZipFile(os.path.join(bkd, zip_name)) as zf:
+        assert sorted(zf.namelist()) == archived
+    assert sorted(os.listdir(rep)) == ["report_mixed.txt"]
+
+
 def test_quarantine_ladder_bad_layout_file(spark, tmp_path):
     """Reference escalation ladder (README.md:110-115): a bad-layout file is
     quarantined, re-attempted automatically on runs within 2 days of first
@@ -351,6 +397,27 @@ def test_compact_coalesces_small_partitions(spark, tmp_path):
     assert errs_after == errs_before
 
 
+@pytest.mark.parametrize("table", ["bitacora", "logs"])
+def test_compact_refuses_tables_without_per_file_partitions(spark, tmp_path, table):
+    """bitacora (flat files) and logs (fecha dirs) have no nombreArchivo
+    partitions to absorb: compacting one raises before it writes anything,
+    and reads are unchanged."""
+    rep = tmp_path / "in"
+    rep.mkdir()
+    FX.make_allvalid(str(rep), n=5)
+    FX.make_badlayout(str(rep))
+    wh_root = str(tmp_path / "wh")
+    process_directory(spark, str(rep), wh_root, process_date="2026-03-28")
+    wh = Warehouse(spark, wh_root)
+    before = _rows_key(wh.read(table))
+    roots_before = sorted(os.listdir(wh_root))
+    with pytest.raises(ValueError, match="nombreArchivo"):
+        wh.compact(table)
+    assert _rows_key(wh.read(table)) == before
+    assert sorted(os.listdir(wh_root)) == roots_before
+    assert wh._current_compact_version(table) is None
+
+
 def test_compact_live_wins_over_stale_compacted_rows(spark, tmp_path):
     """A deliberate reprocess after compaction shadows the stale compacted
     copy of that file until the next compact absorbs the fresh rows."""
@@ -428,18 +495,15 @@ def test_cli_compact_mode(spark, tmp_path):
         df = spark.createDataFrame(
             [(k, f"part{i}.txt") for k in range(10)], "k long, nombreArchivo string"
         )
-        wh.append_partitioned(df, "t")
-    rc = main(
-        [
-            "--input", "unused",
-            "--warehouse", str(tmp_path / "wh_cli"),
-            "--compact", "t",
-            "--cluster-by", "k",
-            "--target-mb", "1",
-        ]
-    )
+        wh.append_partitioned(df, "estadisticas")
+    args = ["--input", "unused", "--warehouse", str(tmp_path / "wh_cli")]
+    rc = main(args + ["--compact", "estadisticas", "--cluster-by", "k", "--target-mb", "1"])
     assert rc == 0
-    assert wh.read("t").count() == 30
+    assert wh.read("estadisticas").count() == 30
+    assert wh._current_compact_version("estadisticas") is not None
+    # only the per-file partitioned tables can be compacted
+    with pytest.raises(SystemExit):
+        main(args + ["--compact", "bitacora"])
 
 
 def test_forget_erases_email_everywhere(spark, tmp_path):
